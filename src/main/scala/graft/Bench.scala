@@ -9,41 +9,7 @@ import org.apache.spark.sql.types._
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Reducer count must scale with BYTES, not stay pinned at the core
-      // count: the SCALING.md §8 sf10 rung killed q_triangle_count /
-      // q_graph_jaccard with SPILL_OUT_OF_MEMORY when 1.5e9 wedge rows
-      // landed on 32 reducers (~50M rows/task). Start wide and let AQE
-      // coalesce. r15: the width is DERIVED FROM THE CORPUS SIZE
-      // (SessionTuning.initialParts) instead of r14's flat 1024 — the
-      // flat constant scheduled 1024 near-empty tasks through every
-      // exchange AQE leaves uncoalesced (measured: a 2.5 s / 0.1 MB
-      // stage in q_rank_fusion at sf0.1); the derived width keeps the
-      // sf10 spill envelope (~8 MB of input per pre-coalesce partition)
-      // at every scale.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        SessionTuning.initialParts(sfDir, cpus.toInt).toString)
-      // Shuffle WRITER selection (r15, measured): with reduce counts at
-      // or under spark.shuffle.sort.bypassMergeThreshold (default 200),
-      // Spark picks BypassMergeSortShuffleWriter, which opens one file +
-      // compression stream PER REDUCE PARTITION per map task — measured
-      // here at ~8x the map-stage cpu of the sort-based writer on the
-      // many small per-pass shuffles of the iterative graph loops
-      // (q_label_prop map stages 1.3 s -> 10.2 s of task time when the
-      // derived reducer width dropped under the threshold). Keep the
-      // sort-based (Unsafe) writer for everything but trivially narrow
-      // shuffles; at cluster scale reduce counts exceed 200 anyway, so
-      // this only governs the small-R regime it was measured in.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.spark.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.session(sfDir, SessionTuning.cpus)
     // pre-warm reads: touch every input table once so page-cache/codegen
     // first-read cost isn't attributed to whichever query runs first
     Seq("region", "nation", "customer", "supplier", "part", "orders",

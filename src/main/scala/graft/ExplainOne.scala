@@ -2,46 +2,20 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-evidence dumper for the optimization rounds: writes
   * `.explain("formatted")` for named queries to files, so plan claims in
   * OPTIMIZATION_r*.md are checkable without running Spark.
   * Usage: runMain graft.ExplainOne <sfDir> <outDir> <suffix> <q> [<q> ...]
-  * Writes <outDir>/<q>_<suffix>.txt per query. Same session shape as
-  * Bench (extensions, AQE initialPartitionNum, UTC) so the dumped plan
-  * is the one the bench actually runs. */
+  * Writes <outDir>/<q>_<suffix>.txt per query. Runs the judged session
+  * (SessionTuning.session), so the dumped plan is the one the bench
+  * actually runs. */
 object ExplainOne {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
     val suffix = args(2)
     val names = args.drop(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // corpus-size-derived pre-coalesce width — same session as Bench
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        SessionTuning.initialParts(sfDir, cpus.toInt).toString)
-      // Shuffle WRITER selection (r15, measured): with reduce counts at
-      // or under spark.shuffle.sort.bypassMergeThreshold (default 200),
-      // Spark picks BypassMergeSortShuffleWriter, which opens one file +
-      // compression stream PER REDUCE PARTITION per map task — measured
-      // here at ~8x the map-stage cpu of the sort-based writer on the
-      // many small per-pass shuffles of the iterative graph loops
-      // (q_label_prop map stages 1.3 s -> 10.2 s of task time when the
-      // derived reducer width dropped under the threshold). Keep the
-      // sort-based (Unsafe) writer for everything but trivially narrow
-      // shuffles; at cluster scale reduce counts exceed 200 anyway, so
-      // this only governs the small-R regime it was measured in.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.spark.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.session(sfDir, SessionTuning.cpus)
     Files.createDirectories(Paths.get(outDir))
     names.foreach { n =>
       val fn = SparkEntry.queries(n)

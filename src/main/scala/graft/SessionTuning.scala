@@ -1,8 +1,12 @@
 package graft
 
-/** Scale-adaptive session knobs shared by every driver-contract main
-  * (Bench / TimeOne / Verify / VerifySome / ExplainOne), so the bench,
-  * the correctness dump and solo re-times all run the same session.
+import org.apache.spark.sql.SparkSession
+
+/** The one judged Spark session. Every driver-contract main (Bench,
+  * Verify, ExplainOne, TimeOne) and the spec suite's shared session
+  * build it through `session`, so the bench, the correctness dump,
+  * plan dumps, solo re-times and the specs all plan under the same
+  * conf. Only the core count and the corpus differ between them.
   *
   * initialParts — the AQE pre-coalesce reducer width. Round 14 pinned
   * it at a flat 1024 after the sf10 ladder killed fixed-32-reducer
@@ -24,6 +28,38 @@ package graft
   * At sf0.1 (17.5 MB) the floor gives 64. */
 object SessionTuning {
 
+  /** Local core count: `SPARK_GRAFT_CPUS`, else the host's processors
+    * capped at 32. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(math.min(32, Runtime.getRuntime.availableProcessors()))
+
+  /** The judged session over the corpus at `sfDir` on `local[cpus]`. */
+  def session(sfDir: String, cpus: Int): SparkSession = {
+    val s = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+        initialParts(sfDir, cpus).toString)
+      // Shuffle WRITER selection (r15, measured): with reduce counts at
+      // or under spark.shuffle.sort.bypassMergeThreshold (default 200),
+      // Spark picks BypassMergeSortShuffleWriter, which opens one file +
+      // compression stream PER REDUCE PARTITION per map task — measured
+      // here at ~8x the map-stage cpu of the sort-based writer on the
+      // many small per-pass shuffles of the iterative graph loops
+      // (q_label_prop map stages 1.3 s -> 10.2 s of task time when the
+      // derived reducer width dropped under the threshold). Keep the
+      // sort-based (Unsafe) writer for everything but trivially narrow
+      // shuffles; at cluster scale reduce counts exceed 200 anyway, so
+      // this only governs the small-R regime it was measured in.
+      .config("spark.shuffle.sort.bypassMergeThreshold", "8")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.extensions", "graft.spark.GraftExtensions")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
   /** Iterative-loop session scope (r16, guide §2.2/§2.4). The graph /
     * clustering loops run many per-pass actions over tables whose size
     * is KNOWN (the loops count their node/edge tables once for the
@@ -39,7 +75,7 @@ object SessionTuning {
     * their broadcast gates); at the scale where AQE's skew handling
     * matters the loop never enters the scope. Conf is restored in a
     * finally: the scope only covers the loop's own actions. */
-  def withLoopWidth[T](s: org.apache.spark.sql.SparkSession, approxBytes: Long)(body: => T): T = {
+  def withLoopWidth[T](s: SparkSession, approxBytes: Long)(body: => T): T = {
     // 8 MB/partition, NOT the 64 MB throughput advisory: a per-pass
     // reduce sits on the loop's critical path (latency-bound) — at the
     // advisory size q_pagerank's whole reduce+join+checkpoint ran as ONE

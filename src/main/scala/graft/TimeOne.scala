@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Iteration helper: time named queries (min of N, like Bench) on a
-  * given corpus without running the whole battery.
+  * given corpus without running the whole battery, on the judged
+  * session (SessionTuning.session) — a solo re-time never runs a
+  * session the bench does not.
   * Usage: runMain graft.TimeOne <sfDir> <query> [<query> ...]
   *
   * Carries the SAME attribution instruments as the Bench battery
@@ -24,36 +24,7 @@ object TimeOne {
     val sfDir = args(0)
     val names = args.drop(1)
     val nRuns = sys.env.get("GRAFT_TIMEONE_RUNS").flatMap(_.toIntOption).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_SHUFFLE_PARTS", cpus))
-      // reducers scale with bytes via AQE (see Bench.scala: the sf10
-      // ladder rung killed fixed-32-reducer wedge joins with spill OOM)
-      // corpus-size-derived pre-coalesce width — same session as Bench
-      // (GRAFT_INIT_PARTS overrides for experiments)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("GRAFT_INIT_PARTS",
-          SessionTuning.initialParts(sfDir, cpus.toInt).toString))
-      // sort-based writer for small-R shuffles — see Bench.scala (r15)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("GRAFT_BYPASS_THRESHOLD", "8"))
-      // experiment-only A/B knob (r16): bisect AQE's per-exchange job
-      // materialization overhead on tiny iterative loops
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("GRAFT_ADAPTIVE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.spark.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    if (sys.env.contains("GRAFT_TIMEONE_DEBUGCONF"))
-      println("[conf] bypass=" + spark.sparkContext.getConf
-        .get("spark.shuffle.sort.bypassMergeThreshold", "default") +
-        " initParts=" + spark.conf
-        .get("spark.sql.adaptive.coalescePartitions.initialPartitionNum"))
+    val spark = SessionTuning.session(sfDir, SessionTuning.cpus)
     // same three-way read as Bench (wall/cpu/gc) so a solo re-time
     // carries its own attribution — see BASELINE.md "fourth read"
     val osBean: Option[com.sun.management.OperatingSystemMXBean] =

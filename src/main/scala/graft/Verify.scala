@@ -1,8 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * Usage: runMain graft.Verify <sfDir> <outDir> [<query> ...] — extra
+  * names dump only that subset (the oracle_sql.json is still complete). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -15,33 +16,7 @@ object Verify {
     val unknown = only -- SparkEntry.queries.keySet
     require(unknown.isEmpty,
       s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // reducers scale with bytes via AQE (see Bench.scala: the sf10
-      // ladder rung killed fixed-32-reducer wedge joins with spill OOM)
-      // corpus-size-derived pre-coalesce width — same session as Bench
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        SessionTuning.initialParts(sfDir, cpus.toInt).toString)
-      // Shuffle WRITER selection (r15, measured): with reduce counts at
-      // or under spark.shuffle.sort.bypassMergeThreshold (default 200),
-      // Spark picks BypassMergeSortShuffleWriter, which opens one file +
-      // compression stream PER REDUCE PARTITION per map task — measured
-      // here at ~8x the map-stage cpu of the sort-based writer on the
-      // many small per-pass shuffles of the iterative graph loops
-      // (q_label_prop map stages 1.3 s -> 10.2 s of task time when the
-      // derived reducer width dropped under the threshold). Keep the
-      // sort-based (Unsafe) writer for everything but trivially narrow
-      // shuffles; at cluster scale reduce counts exceed 200 anyway, so
-      // this only governs the small-R regime it was measured in.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.spark.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.session(sfDir, SessionTuning.cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -52,6 +27,18 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
+    // The q_ann_ivf / q_ann_pq index-derived oracles (and q_semantic_dedup
+    // / q_cluster_balance / q_cluster_purity, which share the IVF
+    // centroids) exist only once their seeded index was trained in this
+    // JVM (Vectors.oracle). A subset run that left them out still builds
+    // them (result discarded), so its oracle_sql.json carries the same
+    // keys as a full run's instead of silently downgrading them to
+    // rows-only at the driver.
+    if (only.nonEmpty)
+      Seq("q_ann_ivf", "q_ann_pq").filterNot(only).foreach { n =>
+        try SparkEntry.queries(n)(spark, sfDir).count()
+        catch { case scala.util.control.NonFatal(_) => () }
+      }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -73,13 +73,11 @@ object Graphs {
     * (VERDICT r14 #1): degree-split wedge counting
     * (edgeCommonNeighborCounts) shuffles only bounded-width rows — the
     * array-carry SMJ shape that died at sf10 (227 GB spill) is never
-    * planned at any scale. GraphShape prints a corpus's cost terms
-    * before you pay either path. GRAFT_ADJ_CELL_GATE overrides the
-    * gate for scaling-ladder runs (e.g. =0 forces the above-gate
-    * algorithm at a judged sf so its scaling can be MEASURED —
-    * SCALING.md §9). */
-  private[graft] val ADJ_CELL_GATE = sys.env.get("GRAFT_ADJ_CELL_GATE")
-    .flatMap(_.toLongOption).getOrElse(512000000L)
+    * planned at any scale. The builders take the gate as their
+    * `broadcastGate` parameter: passing 0L forces the above-gate
+    * algorithm at a judged sf so its scaling can be MEASURED
+    * (SCALING.md §8; GraphsSpec does this). */
+  private[graft] val ADJ_CELL_GATE = 512000000L
 
   private[graft] def maybeBroadcast(df: DataFrame, rows: Long, gate: Long): DataFrame =
     if (rows <= gate) broadcast(df) else df
@@ -99,7 +97,7 @@ object Graphs {
     * 54 jobs / 7 passes, every stage ≤ 55 ms). */
   private[graft] def scopedPass[T](s: SparkSession, stateRows: Long,
       streamRows: Long, gate: Long)(body: => T): T =
-    if (stateRows <= gate && !sys.env.contains("GRAFT_NO_LOOP_SCOPE"))
+    if (stateRows <= gate)
       graft.SessionTuning.withLoopWidth(s, 16L * (stateRows + streamRows))(body)
     else body
 
@@ -122,10 +120,6 @@ object Graphs {
     * present, distinct, with the source's out-degree DENORMALIZED onto
     * each edge at build time (PageRank then needs no per-pass degree
     * join), materialized once per corpus. */
-  /** Diagnostic-only accessor (GraphShape main). */
-  private[queries] def copurchaseEdgesForDiag(s: SparkSession, d: String): DataFrame =
-    copurchaseEdges(s, d)
-
   private def copurchaseEdges(s: SparkSession, d: String): DataFrame = {
     // resolve the items artifact before entering the edge build — not
     // required for correctness (materializedOnce supports nested builds

@@ -641,8 +641,6 @@ object TextOps {
         while (!converged && iters < 32) onePass()
       }
     else while (!converged && iters < 32) onePass()
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      println(s"[cc-debug] ccPointerDoubling passes=$iters")
     require(converged,
       s"ccPointerDoubling did not converge within $iters passes")
     labels.select(col("doc_id"), col("cl").as("cluster_id"),

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 /** Failure-mode pins for the scale knobs (VERDICT r15 #3/#4): the
   * corpus-byte width derivation must fall back LOUDLY (never silently)
   * off the local-FS harness, and the packed 31-bit graph keys must fail
-  * loudly — not wrap — past their envelope. */
+  * loudly — not wrap — past their envelope. Also pins that the specs'
+  * shared session is the judged one. */
 class SessionTuningSpec extends SparkTestBase {
 
   test("initialParts derives from corpus bytes on a readable dir") {
@@ -17,6 +18,16 @@ class SessionTuningSpec extends SparkTestBase {
   test("initialParts falls back to the 2x-cores floor on an unreadable corpus") {
     assert(SessionTuning.initialParts("/nonexistent/corpus/dir", 4) == 8L)
     assert(SessionTuning.initialParts("/nonexistent/corpus/dir", 32) == 64L)
+  }
+
+  test("specs run the judged session: derived width, bypass threshold 8, extensions, UTC") {
+    val s = SparkTestBase.session
+    assert(s.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum") ==
+      SessionTuning.initialParts(sfDir, 4).toString)
+    assert(s.sparkContext.getConf.get("spark.shuffle.sort.bypassMergeThreshold") == "8")
+    assert(s.conf.get("spark.sql.extensions") == "graft.spark.GraftExtensions")
+    assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(s.sparkContext.master == "local[4]")
   }
 
   test("withLoopWidth restores session conf even when the body throws") {

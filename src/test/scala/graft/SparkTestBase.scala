@@ -4,24 +4,15 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs; UTC + small shuffle partitions to keep
-  * test latency down (scale configs live in Verify/Bench mains). */
+/** Shared local session for specs: the judged session
+  * (SessionTuning.session) over the sf0.001 corpus on 4 cores, so specs
+  * check the plan shapes the bench and Verify actually run. */
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
-  def sfDir: String = "/root/testdata/sf0.001"
+  def sfDir: String = SparkTestBase.sfDir
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.spark.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  val sfDir = "/root/testdata/sf0.001"
+  lazy val session: SparkSession = SessionTuning.session(sfDir, 4)
 }
