@@ -46,10 +46,13 @@ class GraftDsv2Table(val table: GraftTable, ident: String)
 
   override def name(): String = ident
 
-  override def schema(): StructType = {
-    val m = table.meta
-    m.sparkSchema(m.currentSchemaId)
-  }
+  // One metadata read per instance for the analysis-time surface
+  // (schema, partitioning, properties): the calls one statement's
+  // analysis makes then agree with each other, as GraftSnapshotTable's
+  // pinned schema does. Scans, deleteWhere and commits load fresh.
+  private lazy val loaded = table.meta
+
+  override def schema(): StructType = loaded.sparkSchema(loaded.currentSchemaId)
 
   /** DESCRIBE/SHOW CREATE partitioning surface: the hidden-partition
     * spec rendered as Spark connector transforms (the inverse of
@@ -58,7 +61,7 @@ class GraftDsv2Table(val table: GraftTable, ident: String)
     * not claim a partitioned table is unpartitioned. */
   override def partitioning(): Array[org.apache.spark.sql.connector.expressions.Transform] = {
     import org.apache.spark.sql.connector.expressions.Expressions
-    val m = table.meta
+    val m = loaded
     val idToName = m.currentSchema.map(c => c.id -> c.name).toMap
     m.partitionFields.flatMap { pf =>
       idToName.get(pf.sourceId).map { src =>
@@ -81,7 +84,7 @@ class GraftDsv2Table(val table: GraftTable, ident: String)
     * properties plus the format pins the reference declares
     * (README.md:176-177). */
   override def properties(): util.Map[String, String] = {
-    val meta = table.meta
+    val meta = loaded
     val out = new util.HashMap[String, String]()
     out.put("format-version", meta.formatVersion.toString)
     out.put("provider", "graft")
@@ -118,7 +121,9 @@ class GraftDsv2Table(val table: GraftTable, ident: String)
   /** `DELETE FROM t WHERE ...` — only for predicates expressible as a
     * Column (canDeleteWhere gates). Routes by Iceberg's
     * `write.delete.mode` table property: copy-on-write by default
-    * (read-optimized: matching files rewritten), merge-on-read when the
+    * (read-optimized: the filters also plan the delete, so files the
+    * manifest stats prove fully matched are dropped by metadata and
+    * only the rest are probed and rewritten), merge-on-read when the
     * property says so (write-optimized: a positional delete file, no
     * data rewrite — the right trade at 100 TB for small deletes). */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
@@ -129,7 +134,7 @@ class GraftDsv2Table(val table: GraftTable, ident: String)
     val pred = filters.flatMap(FilterToColumn(_)).reduceOption(_ && _).getOrElse(lit(true))
     if (table.meta.allProperties.get("write.delete.mode").contains("merge-on-read"))
       table.deleteMoR(spark, pred)
-    else table.delete(spark, pred)
+    else table.delete(spark, pred, filters.toSeq)
   }
 }
 

@@ -3,6 +3,7 @@ package graft.table
 import scala.collection.mutable
 
 import org.apache.spark.sql.sources._
+import org.apache.spark.sql.types._
 
 /** Maps DataSource-pushed `Filter`s to per-column [lo, hi] bounds in the
   * manifest's stats string space (the same rendering FooterStats uses:
@@ -89,6 +90,68 @@ private[graft] object FilterBounds {
     filters.foreach(walk)
     (acc -- conflicted).toMap
   }
+
+  /** Does `f` hold for EVERY row of a file, provably from its manifest
+    * stats? The metadata-only DELETE test (Iceberg's delete-by-metadata):
+    * true only for a conjunction (`And` recurses) of `=`, `<`, `<=`, `>`,
+    * `>=` and `IsNotNull` on columns `stats` answers for. `stats(c)` must
+    * return the column's type and [min, max] ONLY when the file records a
+    * null count of 0 for it — a NULL row satisfies no comparison — and
+    * only for types compared exactly here: integral, decimal, date and
+    * timestamp. Strings are out (parquet may truncate binary min/max) and
+    * so are floats (a NaN row is absent from min/max yet fails every
+    * `<`). Strict comparisons stay strict, unlike `collect`'s inclusive
+    * widening: `max < v` proves `c < v`, `max = v` does not. */
+  def provesAll(f: Filter, stats: String => Option[(DataType, ColRange)]): Boolean = {
+    def cmp(c: String, v: Any)(ok: (Int, Int) => Boolean): Boolean =
+      stats(c).exists { case (dt, r) =>
+        literalFits(dt, v) && render(v).exists { lit =>
+          (for (lo <- typedCompare(dt, r.min, lit); hi <- typedCompare(dt, r.max, lit))
+            yield ok(lo, hi)).contains(true)
+        }
+      }
+    f match {
+      case And(l, r)                => provesAll(l, stats) && provesAll(r, stats)
+      case IsNotNull(c)             => stats(c).isDefined
+      case EqualTo(c, v)            => cmp(c, v)((lo, hi) => lo == 0 && hi == 0)
+      case LessThan(c, v)           => cmp(c, v)((_, hi) => hi < 0)
+      case LessThanOrEqual(c, v)    => cmp(c, v)((_, hi) => hi <= 0)
+      case GreaterThan(c, v)        => cmp(c, v)((lo, _) => lo > 0)
+      case GreaterThanOrEqual(c, v) => cmp(c, v)((lo, _) => lo >= 0)
+      case _                        => false
+    }
+  }
+
+  /** Types `provesAll` compares exactly in the stats string space. */
+  def provable(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | DateType | TimestampType => true
+    case _: DecimalType => true
+    case _ => false
+  }
+
+  /** Is `v`'s runtime class the one Spark pushes for a column of type
+    * `dt`? A timestamp with sub-microsecond digits is refused: the stats
+    * rendering would truncate it, and truncation breaks `>=`. */
+  private def literalFits(dt: DataType, v: Any): Boolean = (dt, v) match {
+    case (ByteType | ShortType | IntegerType | LongType | _: DecimalType,
+        _: java.lang.Byte | _: java.lang.Short | _: java.lang.Integer | _: java.lang.Long |
+        _: java.math.BigDecimal | _: BigDecimal) => true
+    case (DateType, _: java.sql.Date | _: java.time.LocalDate) => true
+    case (TimestampType, t: java.sql.Timestamp) => t.getNanos % 1000 == 0
+    case (TimestampType, t: java.time.Instant) => t.getNano % 1000 == 0
+    case _ => false
+  }
+
+  /** Typed order of two stats-space strings; None when either fails to
+    * parse as `dt` (then nothing is proven). */
+  private def typedCompare(dt: DataType, a: String, b: String): Option[Int] =
+    scala.util.Try(dt match {
+      case DateType => java.time.LocalDate.parse(a).compareTo(java.time.LocalDate.parse(b))
+      case TimestampType =>
+        java.time.LocalDateTime.parse(a, tsFmt)
+          .compareTo(java.time.LocalDateTime.parse(b, tsFmt))
+      case _ => BigDecimal(a).compare(BigDecimal(b))
+    }).toOption
 
   /** Raw typed literals of conjunctive equality filters. Bucket pruning
     * hashes the VALUE with the write side's expression — the stringified

@@ -2,7 +2,7 @@ package graft.table
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.FileStatus
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
@@ -22,30 +22,28 @@ object FooterStats {
     .ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS")
     .withZone(java.time.ZoneOffset.UTC)
 
-  def read(file: HPath, schema: Seq[ColumnDef]): (Long, Map[String, ColRange]) =
-    { val (r, s, _) = readWithNulls(file, schema); (r, s) }
+  /** One footer's harvest: row count, per-column [min,max], per-column
+    * null counts (only columns where EVERY row group reports numNulls —
+    * a partial count would under-report and make IS NULL pruning
+    * unsound), and the top-level column names the footer schema holds —
+    * the per-file presence check add_files needs (Spark's
+    * directory-level inference reads ONE footer, so a drifting file
+    * hides from it). */
+  final case class Footer(
+      rows: Long,
+      stats: Map[String, ColRange],
+      nulls: Map[String, Long],
+      columns: Set[String])
 
-  /** Top-level column names present in a file's footer schema — the
-    * per-file presence check add_files needs (Spark's directory-level
-    * inference reads ONE footer, so a drifting file hides from it). */
-  def columnsOf(file: HPath): Set[String] = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(file, GraftIO.conf))
-    try reader.getFooter.getFileMetaData.getSchema.getFields.asScala
-      .map(_.getName).toSet
-    finally reader.close()
-  }
-
-  /** Full harvest: row count, per-column [min,max], and per-column null
-    * counts (only columns where EVERY row group reports numNulls — a
-    * partial count would under-report and make IS NULL pruning unsound). */
-  def readWithNulls(file: HPath, schema: Seq[ColumnDef])
-      : (Long, Map[String, ColRange], Map[String, Long]) = {
+  /** Harvest one listed file's footer: a single open, no extra status
+    * call, read options built once per Hadoop conf (GraftIO). */
+  def readWithNulls(file: FileStatus, schema: Seq[ColumnDef]): Footer = {
     val byName = schema.map(c => c.name -> c.sparkType).toMap
     val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(file, GraftIO.conf))
+      HadoopInputFile.fromStatus(file, GraftIO.conf), GraftIO.parquetReadOptions)
     try {
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
+      val footer = reader.getFooter
+      val blocks = footer.getBlocks.asScala.toSeq
       val rows = blocks.map(_.getRowCount).sum
       // per column: fold min/max across row groups
       val acc = scala.collection.mutable.Map.empty[String, (Comparable[Any], Comparable[Any], DataType)]
@@ -74,7 +72,8 @@ object FooterStats {
       val stats = acc.flatMap { case (name, (lo, hi, dt)) =>
         for (l <- render(lo, dt); h <- render(hi, dt)) yield name -> ColRange(l, h)
       }.toMap
-      (rows, stats, (nullAcc -- nullBad).toMap)
+      Footer(rows, stats, (nullAcc -- nullBad).toMap,
+        footer.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSet)
     } finally reader.close()
   }
 

@@ -5,6 +5,8 @@ import java.nio.file.{FileAlreadyExistsException, Files, Paths, StandardCopyOpti
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.ParquetReadOptions
 
 /** Table-layer filesystem access, routed through Hadoop `FileSystem` so a
   * Graft warehouse works on ANY Hadoop-supported store — `file://` in
@@ -50,6 +52,23 @@ object GraftIO {
   }
 
   def setConf(c: Configuration): Unit = cachedConf = c
+
+  /** Parquet read options over `conf`, built once per conf instance:
+    * the one-argument `ParquetFileReader.open` builds a fresh Hadoop
+    * `Configuration` per call, re-parsing core-default.xml each time —
+    * a per-footer cost every commit's stats harvest would pay. */
+  @volatile private var cachedReadOptions: (Configuration, ParquetReadOptions) = _
+
+  def parquetReadOptions: ParquetReadOptions = {
+    val c = conf
+    val cached = cachedReadOptions
+    if (cached != null && (cached._1 eq c)) cached._2
+    else {
+      val opts = HadoopReadOptions.builder(c).build()
+      cachedReadOptions = (c, opts)
+      opts
+    }
+  }
 
   /** FileSystem for a path (Hadoop caches instances per scheme+authority). */
   def fs(p: HPath): FileSystem = p.getFileSystem(conf)
@@ -136,16 +155,23 @@ object GraftIO {
     if (!f.exists(p)) Nil else f.listStatus(p).toSeq
   }
 
-  /** All FILES under `p`, recursively (empty if absent). */
+  /** All FILES under `p`, recursively (empty if absent). Walks with
+    * `listStatus`, never Hadoop's `listFiles(p, true)`: the latter wraps
+    * every entry in a `LocatedFileStatus`, whose constructor reads owner
+    * and permissions — and `RawLocalFileSystem` without native IO
+    * answers that by forking `ls -ld` once per FILE (on a 4-core host a
+    * 111-file data dir listed in 1.66 s, against 29 ms with
+    * `listStatus`). Spark's `HadoopFSUtils` avoids
+    * that constructor for the same reason. Checksummed filesystems hide
+    * `.crc` sidecars from `listStatus` exactly as from `listFiles`. */
   def listFilesRecursive(p: HPath): Seq[FileStatus] = {
     val f = fs(p)
-    if (!f.exists(p)) Nil
-    else {
-      val it = f.listFiles(p, true)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[FileStatus]
-      while (it.hasNext) buf += it.next()
-      buf.toSeq
+    val buf = scala.collection.mutable.ArrayBuffer.empty[FileStatus]
+    def walk(d: HPath): Unit = f.listStatus(d).foreach { st =>
+      if (st.isDirectory) walk(st.getPath) else buf += st
     }
+    if (f.exists(p)) walk(p)
+    buf.toSeq
   }
 
   def readAllBytes(p: HPath): Array[Byte] = {

@@ -740,22 +740,22 @@ final class GraftTable(val dir: HPath) {
     val required = m0.currentSchema.map(_.name)
     val newFiles = parquets.map { st =>
       val p = st.getPath
-      val missing = required.toSet -- FooterStats.columnsOf(p)
+      val footer = FooterStats.readWithNulls(st, m0.currentSchema)
+      val missing = required.toSet -- footer.columns
       require(missing.isEmpty,
         s"add_files: $p lacks column(s) ${missing.mkString(", ")} — registering it " +
           "would read back silent NULLs")
-      val (rows, stats, nulls) = FooterStats.readWithNulls(p, m0.currentSchema)
       DataFile(
         // local sources register as plain absolute paths (scheme-less,
         // the historical manifest form); remote sources keep the full URI
         path = if (p.toUri.getScheme == null || p.toUri.getScheme == "file")
           p.toUri.getPath else p.toString,
-        rows = rows,
+        rows = footer.rows,
         schemaId = m0.currentSchemaId,
         partitionValues = Map.empty,
-        stats = Some(stats),
+        stats = Some(footer.stats),
         sizeBytes = Some(st.getLen),
-        nulls = if (nulls.isEmpty) None else Some(nulls))
+        nulls = if (footer.nulls.isEmpty) None else Some(footer.nulls))
     }
     TableMeta.commitRetry(dir) { fresh =>
       // guards validate FRESH metadata inside the retry closure (like
@@ -1050,32 +1050,77 @@ final class GraftTable(val dir: HPath) {
   /** D2 row-level `DELETE WHERE` (README.md:231), copy-on-write: one scan
     * finds the files that actually contain matching rows; only those are
     * rewritten without the matching rows. Old snapshots keep the original
-    * files — the README.md:258 time-travel "magic" is structural. */
-  def delete(spark: SparkSession, pred: Column): Unit = {
+    * files — the README.md:258 time-travel "magic" is structural. This
+    * whole-table probe is the reference the filter-planned overload below
+    * must agree with. */
+  def delete(spark: SparkSession, pred: Column): Unit = delete(spark, pred, Nil)
+
+  /** CoW delete with `pred`'s DataSource-`Filter` form (the SQL DELETE
+    * path pushes both; their conjunction must equal `pred`). Work is in
+    * proportion to the files the delete changes (`planDelete`): files
+    * `planFilters` rules out are never read, files whose manifest stats
+    * prove every row matches are dropped by metadata alone, and only the
+    * rest are probed and rewritten. A retention delete of whole days
+    * runs no Spark job at all. */
+  def delete(spark: SparkSession, pred: Column,
+      filters: Seq[org.apache.spark.sql.sources.Filter]): Unit = {
     val (v, m) = TableMeta.load(dir)
     val manifest = m.currentSnapshot.map(_.manifest).getOrElse(Nil)
     if (manifest.isEmpty) return
+    val (dropped, probe) = planDelete(m, filters)
     // readLive: earlier MoR-deleted rows must not resurrect in the rewrite
-    val live = readLive(spark, m, manifest)
-    val affectedPaths = live.filter(pred)
-      .select(col("_graft_fp")).distinct()
-      .collect().map(_.getString(0)).toSet
-    val affected = matchAffected(manifest, affectedPaths)
-    if (affected.isEmpty) return
+    val affected =
+      if (probe.isEmpty) Nil
+      else matchAffected(probe, readLive(spark, m, probe).filter(pred)
+        .select(col("_graft_fp")).distinct()
+        .collect().map(_.getString(0)).toSet)
+    if (dropped.isEmpty && affected.isEmpty) return
     // DELETE WHERE pred removes rows where pred IS TRUE; null-pred rows
     // are kept — hence not(coalesce(pred, false)), not plain !pred.
     // Survivors are UNMODIFIED rows merely relocated, so their lineage
     // (row id AND last-updated seq) is materialized into the rewrite —
     // v3's CoW obligation.
-    val kept = readLiveLineage(spark, m, affected)
-      .filter(!coalesce(pred, lit(false)))
-      .select(m.currentSchema.map(c => col(c.name)) ++
-        Seq(col("_graft_row_id"), col("_graft_last_seq")): _*)
-    val newFiles = writeFiles(spark, m, kept, lineageMaterialized = true)
-    val newManifest = manifest.diff(affected) ++ newFiles
+    val newFiles =
+      if (affected.isEmpty) Nil
+      else writeFiles(spark, m, readLiveLineage(spark, m, affected)
+        .filter(!coalesce(pred, lit(false)))
+        .select(m.currentSchema.map(c => col(c.name)) ++
+          Seq(col("_graft_row_id"), col("_graft_last_seq")): _*),
+        lineageMaterialized = true)
+    val newManifest = manifest.diff(dropped ++ affected) ++ newFiles
     // single-shot commit: a CoW delete validated against THIS manifest —
     // a concurrent change must surface, not be silently reapplied
     TableMeta.commit(dir, v, appendSnapshot(m, "delete", newManifest, carryDeletes(m)))
+  }
+
+  /** DELETE planning over pushed filters: (files dropped whole by
+    * metadata, files to probe). Candidates are `planFilters`' survivors;
+    * a candidate is dropped only when the snapshot holds no positional or
+    * equality delete files, the file has no deletion vector, and every
+    * filter provably holds for all its rows (`FilterBounds.provesAll`
+    * over stats resolved by column id — the manifest keys stats by the
+    * name a column had when the file was written, so a renamed or
+    * re-added column must not borrow another column's stats). No filters
+    * → every file is probed (the reference path). */
+  private[table] def planDelete(m: TableMeta,
+      filters: Seq[org.apache.spark.sql.sources.Filter]): (Seq[DataFile], Seq[DataFile]) = {
+    val candidates = planFilters(m, filters)
+    val snap = m.currentSnapshot
+    if (filters.isEmpty ||
+        snap.exists(s => s.allDeleteFiles.nonEmpty || s.allEqDeleteFiles.nonEmpty))
+      return (Nil, candidates)
+    val withDv = snap.map(_.allDeleteVectors.map(_.dataPath).toSet).getOrElse(Set.empty)
+    val current = m.currentSchema.map(c => c.name -> c).toMap
+    candidates.partition { f =>
+      val written = m.schemaAt(f.schemaId).map(c => c.id -> c).toMap
+      def stats(name: String): Option[(DataType, ColRange)] = for {
+        cur <- current.get(name) if FilterBounds.provable(cur.sparkType)
+        w <- written.get(cur.id) if FilterBounds.provable(w.sparkType)
+        if f.nulls.flatMap(_.get(w.name)).contains(0L)
+        r <- f.stats.flatMap(_.get(w.name))
+      } yield (cur.sparkType, r)
+      !withDv(f.path) && filters.forall(FilterBounds.provesAll(_, stats))
+    }
   }
 
   /** D2 merge-on-read flavor (Iceberg v2's actual default): instead of
@@ -1226,10 +1271,10 @@ final class GraftTable(val dir: HPath) {
     df.coalesce(1).write.parquet(outDir.toString)
     val parts = GraftIO.listFilesRecursive(outDir)
       .filter(st => st.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath).sortBy(_.toString)
-    parts.flatMap { p =>
-      val (rows, _) = FooterStats.read(p, Nil)
-      if (rows == 0) None else Some(GraftIO.relativize(dir, p) -> rows)
+      .sortBy(_.getPath.toString)
+    parts.flatMap { st =>
+      val rows = FooterStats.readWithNulls(st, Nil).rows
+      if (rows == 0) None else Some(GraftIO.relativize(dir, st.getPath) -> rows)
     }
   }
 
@@ -2548,14 +2593,14 @@ final class GraftTable(val dir: HPath) {
           val Array(k, v) = seg.split("=", 2)
           k -> Transforms.unescapePathValue(v) // bounds compare unescaped
         }.toMap
-      val (rows, stats, nulls) = FooterStats.readWithNulls(p, m.currentSchema)
+      val footer = FooterStats.readWithNulls(st, m.currentSchema)
       // zero-row files (empty write partitions) carry no data: keep the
       // manifest tight, they'd only bloat planning
-      if (rows == 0) None
-      else Some(DataFile(rel, rows, m.currentSchemaId, pvals,
-        if (stats.isEmpty) None else Some(stats),
+      if (footer.rows == 0) None
+      else Some(DataFile(rel, footer.rows, m.currentSchemaId, pvals,
+        if (footer.stats.isEmpty) None else Some(footer.stats),
         sizeBytes = Some(st.getLen),
-        nulls = if (nulls.isEmpty) None else Some(nulls),
+        nulls = if (footer.nulls.isEmpty) None else Some(footer.nulls),
         materializedLineage = if (lineageMaterialized) Some(true) else None))
     }
     attachBlooms(spark, m, entries)

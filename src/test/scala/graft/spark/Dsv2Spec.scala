@@ -93,6 +93,26 @@ class Dsv2Spec extends SparkTestBase {
     assert(rows.forall(_.isNullAt(2))) // added column reads NULL for old files
   }
 
+  test("one table instance answers schema, partitioning and properties from one metadata read") {
+    val wh = Files.createTempDirectory("graft_wh")
+    val cat = new GraftCatalog(wh)
+    cat.createSchema("db")
+    val t = cat.createTable("db.pinned", eventsSchema, partitionDays = Some("ts"))
+    val analyzed = new GraftDsv2Table(t, "db.pinned")
+    val schema0 = analyzed.schema()
+    // a concurrent DDL lands mid-analysis
+    t.addColumn("note", StringType)
+    t.setProperties(Map("owner.team" -> "ml"))
+    t.addPartitionField("user_id", "bucket[4]")
+    assert(analyzed.schema() === schema0)
+    assert(analyzed.partitioning().map(_.describe()).toSeq === Seq("days(ts)"))
+    assert(!analyzed.properties().containsKey("owner.team"))
+    val fresh = new GraftDsv2Table(t, "db.pinned")
+    assert(fresh.schema().fieldNames.last === "note")
+    assert(fresh.partitioning().length === 2)
+    assert(fresh.properties().get("owner.team") === "ml")
+  }
+
   test("CALL system.rollback_to_snapshot undoes a delete; procedures return summary rows") {
     val wh = Files.createTempDirectory("graft_wh")
     val cat = new GraftCatalog(wh)

@@ -139,6 +139,8 @@ class HadoopFsSpec extends SparkTestBase {
     assert(files.forall(_.getPath.toUri.getScheme == "graftfs"))
     assert(!files.exists(_.getPath.getName.endsWith(".crc")),
       "no .crc sidecars may leak into the warehouse")
+    // the listStatus walk sees exactly what Hadoop's listFiles sees
+    assert(ListingSpec.pathsAndLengths(files) === ListingSpec.hadoopListFiles(t.dir))
   }
 
   test("publishExclusive on a non-local scheme: exactly one writer wins") {
