@@ -22,6 +22,20 @@ private[graft] object FilterBounds {
     .ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS")
     .withZone(java.time.ZoneOffset.UTC)
 
+  /** The one order of two stats-space strings every planner uses:
+    * numerics as BigDecimal, everything else in UNSIGNED UTF-8 BYTE
+    * order. Parquet footer min/max for strings are ordered by unsigned
+    * UTF-8 bytes, while Java String.compareTo orders UTF-16 code units —
+    * the two disagree on supplementary (non-BMP) characters, and pruning
+    * under the wrong order can skip a file that contains matches. The
+    * fixed-width ISO date and UTC timestamp renderings are ASCII, where
+    * byte order is time order. */
+  def compare(numeric: Boolean, a: String, b: String): Int =
+    if (numeric) BigDecimal(a).compare(BigDecimal(b))
+    else java.util.Arrays.compareUnsigned(
+      a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+      b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
   /** Literal → stats-space string; None for types we don't model. */
   def render(v: Any): Option[String] = v match {
     case null => None
@@ -105,10 +119,13 @@ private[graft] object FilterBounds {
   def provesAll(f: Filter, stats: String => Option[(DataType, ColRange)]): Boolean = {
     def cmp(c: String, v: Any)(ok: (Int, Int) => Boolean): Boolean =
       stats(c).exists { case (dt, r) =>
-        literalFits(dt, v) && render(v).exists { lit =>
-          (for (lo <- typedCompare(dt, r.min, lit); hi <- typedCompare(dt, r.max, lit))
-            yield ok(lo, hi)).contains(true)
-        }
+        val numeric = dt.isInstanceOf[NumericType]
+        // date/time order is byte order only at fixed width: a year past
+        // 9999 renders with a leading '+', and then nothing is proven
+        def fixed(lit: String) = numeric ||
+          (r.min.length == lit.length && r.max.length == lit.length)
+        literalFits(dt, v) && render(v).exists(lit => fixed(lit) &&
+          ok(compare(numeric, r.min, lit), compare(numeric, r.max, lit)))
       }
     f match {
       case And(l, r)                => provesAll(l, stats) && provesAll(r, stats)
@@ -141,17 +158,6 @@ private[graft] object FilterBounds {
     case (TimestampType, t: java.time.Instant) => t.getNano % 1000 == 0
     case _ => false
   }
-
-  /** Typed order of two stats-space strings; None when either fails to
-    * parse as `dt` (then nothing is proven). */
-  private def typedCompare(dt: DataType, a: String, b: String): Option[Int] =
-    scala.util.Try(dt match {
-      case DateType => java.time.LocalDate.parse(a).compareTo(java.time.LocalDate.parse(b))
-      case TimestampType =>
-        java.time.LocalDateTime.parse(a, tsFmt)
-          .compareTo(java.time.LocalDateTime.parse(b, tsFmt))
-      case _ => BigDecimal(a).compare(BigDecimal(b))
-    }).toOption
 
   /** Raw typed literals of conjunctive equality filters. Bucket pruning
     * hashes the VALUE with the write side's expression — the stringified

@@ -3,6 +3,7 @@ package graft.table
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.FileStatus
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
@@ -36,11 +37,14 @@ object FooterStats {
       columns: Set[String])
 
   /** Harvest one listed file's footer: a single open, no extra status
-    * call, read options built once per Hadoop conf (GraftIO). */
+    * call, read options over the shared Hadoop conf (GraftIO) — the
+    * one-argument `open` would build a fresh `Configuration` per footer,
+    * re-parsing core-default.xml each time. */
   def readWithNulls(file: FileStatus, schema: Seq[ColumnDef]): Footer = {
     val byName = schema.map(c => c.name -> c.sparkType).toMap
     val reader = ParquetFileReader.open(
-      HadoopInputFile.fromStatus(file, GraftIO.conf), GraftIO.parquetReadOptions)
+      HadoopInputFile.fromStatus(file, GraftIO.conf),
+      HadoopReadOptions.builder(GraftIO.conf).build())
     try {
       val footer = reader.getFooter
       val blocks = footer.getBlocks.asScala.toSeq

@@ -5,8 +5,6 @@ import java.nio.file.{FileAlreadyExistsException, Files, Paths, StandardCopyOpti
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
-import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.ParquetReadOptions
 
 /** Table-layer filesystem access, routed through Hadoop `FileSystem` so a
   * Graft warehouse works on ANY Hadoop-supported store — `file://` in
@@ -52,23 +50,6 @@ object GraftIO {
   }
 
   def setConf(c: Configuration): Unit = cachedConf = c
-
-  /** Parquet read options over `conf`, built once per conf instance:
-    * the one-argument `ParquetFileReader.open` builds a fresh Hadoop
-    * `Configuration` per call, re-parsing core-default.xml each time —
-    * a per-footer cost every commit's stats harvest would pay. */
-  @volatile private var cachedReadOptions: (Configuration, ParquetReadOptions) = _
-
-  def parquetReadOptions: ParquetReadOptions = {
-    val c = conf
-    val cached = cachedReadOptions
-    if (cached != null && (cached._1 eq c)) cached._2
-    else {
-      val opts = HadoopReadOptions.builder(c).build()
-      cachedReadOptions = (c, opts)
-      opts
-    }
-  }
 
   /** FileSystem for a path (Hadoop caches instances per scheme+authority). */
   def fs(p: HPath): FileSystem = p.getFileSystem(conf)

@@ -113,31 +113,34 @@ final class GraftTable(val dir: HPath) {
     }
   }
 
-  /** Non-numeric bound comparison in UNSIGNED UTF-8 BYTE order: parquet
-    * footer min/max for strings are ordered by unsigned UTF-8 bytes,
-    * while Java String.compareTo orders UTF-16 code units — the two
-    * disagree on supplementary (non-BMP) characters, and pruning under
-    * the wrong order can skip a file that contains matches. ISO
-    * timestamp/date renderings are ASCII, where both orders coincide. */
-  private def utf8Lte(a: String, b: String): Boolean =
-    java.util.Arrays.compareUnsigned(
-      a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      b.getBytes(java.nio.charset.StandardCharsets.UTF_8)) <= 0
+  /** Per-file view of a current-schema column: the column as file `f`'s
+    * written schema holds it (same column id), or None when the file
+    * predates the column. Manifest stats, null counts and Bloom entries
+    * are keyed by the name a column had when its file was written, so
+    * every planner looks them up through this: a renamed or re-added
+    * column never borrows another column's entries. */
+  private def writtenColumn(m: TableMeta): (DataFile, String) => Option[ColumnDef] = {
+    val current = m.currentSchema.map(c => c.name -> c.id).toMap
+    val bySchema = scala.collection.mutable.Map.empty[Int, Map[Int, ColumnDef]]
+    (f, name) => current.get(name).flatMap(id =>
+      bySchema.getOrElseUpdate(f.schemaId, m.schemaAt(f.schemaId).map(c => c.id -> c).toMap)
+        .get(id))
+  }
 
   /** Stats-based file pruning (data skipping): keep only files whose
     * recorded [min, max] for `colName` intersects [lo, hi]. Comparison is
-    * typed (numeric → BigDecimal, else unsigned UTF-8 bytes — the footer
-    * stats order). Files without stats are kept. Most effective after a
-    * sorted compaction (disjoint ranges). */
+    * typed (`FilterBounds.compare`: numeric → BigDecimal, else unsigned
+    * UTF-8 bytes — the footer stats order). Files without stats are
+    * kept. Most effective after a sorted compaction (disjoint ranges). */
   def planColRange(m: TableMeta, colName: String, lo: String, hi: String): Seq[DataFile] = {
     val numeric = m.currentSchema.find(_.name == colName).exists(_.sparkType match {
       case _: NumericType => true
       case _ => false
     })
-    def lte(a: String, b: String): Boolean =
-      if (numeric) BigDecimal(a) <= BigDecimal(b) else utf8Lte(a, b)
+    def lte(a: String, b: String): Boolean = FilterBounds.compare(numeric, a, b) <= 0
+    val written = writtenColumn(m)
     m.currentSnapshot.map(_.manifest).getOrElse(Nil).filter { f =>
-      f.stats.flatMap(_.get(colName)) match {
+      written(f, colName).flatMap(w => f.stats.flatMap(_.get(w.name))) match {
         case Some(ColRange(mn, mx)) => lte(mn, hi) && lte(lo, mx)
         case None                   => true // no stats: cannot skip safely
       }
@@ -173,13 +176,16 @@ final class GraftTable(val dir: HPath) {
     // partition source column name -> its transform field
     val partFields = m.partitionFields.flatMap(pf =>
       m.currentSchema.find(_.id == pf.sourceId).map(c => c.name -> pf)).toMap
+    val written = writtenColumn(m)
     all.filter { f =>
+      // the name this file's stats, null counts and Bloom keys use
+      def key(cname: String): Option[String] = written(f, cname).map(_.name)
       // Null-count pruning: an all-null file can't satisfy IS NOT NULL,
       // a null-free file can't satisfy IS NULL. Spark pushes IsNotNull
       // alongside almost every predicate, so at scale this skips the
       // sparse-column files without opening them.
       val nullsOk = nullness.forall { case (cname, mustBeNull) =>
-        f.nulls.flatMap(_.get(cname)) match {
+        key(cname).flatMap(n => f.nulls.flatMap(_.get(n))) match {
           case Some(nc) => if (mustBeNull) nc > 0 else nc < f.rows
           case None => true
         }
@@ -189,9 +195,8 @@ final class GraftTable(val dir: HPath) {
           case _: NumericType => true
           case _ => false
         })
-        def lte(a: String, bb: String): Boolean =
-          if (numeric) BigDecimal(a) <= BigDecimal(bb) else utf8Lte(a, bb)
-        val statsOk = f.stats.flatMap(_.get(cname)) match {
+        def lte(a: String, bb: String): Boolean = FilterBounds.compare(numeric, a, bb) <= 0
+        val statsOk = key(cname).flatMap(n => f.stats.flatMap(_.get(n))) match {
           case Some(ColRange(mn, mx)) =>
             b.lo.forall(lo => lte(lo, mx)) && b.hi.forall(hi => lte(mn, hi))
           case None => true
@@ -202,16 +207,16 @@ final class GraftTable(val dir: HPath) {
           .flatMap(pf => f.partitionValues.get(pf.name).map(pf -> _)) match {
           case Some((pf, pv)) =>
             Transforms.keepFile(pf.transform, pv, b, eqLiterals.get(cname),
-              numeric, utf8Lte)
+              numeric, (a, bb) => FilterBounds.compare(numeric = false, a, bb) <= 0)
           case None => true
         }
         // Point-lookup skipping: a per-file Bloom sidecar answers
         // "definitely not here" for pushed equality literals — the prune
         // min/max can't make once file key ranges overlap. Loaded lazily
         // (only for files that survive the other checks) and cached.
-        val bloomOk = (f.bloom, eqLiterals.get(cname)) match {
-          case (Some(ref), Some(v)) =>
-            BloomSidecar.read(dir.resolve(ref)).get(cname) match {
+        val bloomOk = (f.bloom, eqLiterals.get(cname), key(cname)) match {
+          case (Some(ref), Some(v), Some(n)) =>
+            BloomSidecar.read(dir.resolve(ref)).get(n) match {
               case Some(bf) => BloomSidecar.mightContain(bf, v)
               case None => true
             }
@@ -259,21 +264,21 @@ final class GraftTable(val dir: HPath) {
             snap.eqDeleteFiles.exists(_.nonEmpty) ||
             snap.deleteVectors.exists(_.nonEmpty)) return None
         val files = snap.manifest
+        val written = writtenColumn(m)
         val minMax = cols.flatMap { cname =>
           m.currentSchema.find(_.name == cname).flatMap { cd =>
             cd.sparkType match {
               case StringType => None
               case dt =>
-                val ranges = files.map(_.stats.flatMap(_.get(cname)))
+                val ranges = files.map(f =>
+                  written(f, cname).flatMap(w => f.stats.flatMap(_.get(w.name))))
                 if (files.nonEmpty && ranges.forall(_.isDefined)) {
                   val rs = ranges.flatten
                   val numeric = dt.isInstanceOf[NumericType]
                   def lo(a: String, b: String) =
-                    if (numeric) { if (BigDecimal(a) <= BigDecimal(b)) a else b }
-                    else { if (utf8Lte(a, b)) a else b }
+                    if (FilterBounds.compare(numeric, a, b) <= 0) a else b
                   def hi(a: String, b: String) =
-                    if (numeric) { if (BigDecimal(a) >= BigDecimal(b)) a else b }
-                    else { if (utf8Lte(a, b)) b else a }
+                    if (FilterBounds.compare(numeric, a, b) >= 0) a else b
                   Some(cname -> ColRange(
                     rs.map(_.min).reduce(lo), rs.map(_.max).reduce(hi)))
                 } else None
@@ -1098,10 +1103,8 @@ final class GraftTable(val dir: HPath) {
     * a candidate is dropped only when the snapshot holds no positional or
     * equality delete files, the file has no deletion vector, and every
     * filter provably holds for all its rows (`FilterBounds.provesAll`
-    * over stats resolved by column id — the manifest keys stats by the
-    * name a column had when the file was written, so a renamed or
-    * re-added column must not borrow another column's stats). No filters
-    * → every file is probed (the reference path). */
+    * over stats resolved by column id, `writtenColumn`). No filters →
+    * every file is probed (the reference path). */
   private[table] def planDelete(m: TableMeta,
       filters: Seq[org.apache.spark.sql.sources.Filter]): (Seq[DataFile], Seq[DataFile]) = {
     val candidates = planFilters(m, filters)
@@ -1111,11 +1114,11 @@ final class GraftTable(val dir: HPath) {
       return (Nil, candidates)
     val withDv = snap.map(_.allDeleteVectors.map(_.dataPath).toSet).getOrElse(Set.empty)
     val current = m.currentSchema.map(c => c.name -> c).toMap
+    val written = writtenColumn(m)
     candidates.partition { f =>
-      val written = m.schemaAt(f.schemaId).map(c => c.id -> c).toMap
       def stats(name: String): Option[(DataType, ColRange)] = for {
         cur <- current.get(name) if FilterBounds.provable(cur.sparkType)
-        w <- written.get(cur.id) if FilterBounds.provable(w.sparkType)
+        w <- written(f, name) if FilterBounds.provable(w.sparkType)
         if f.nulls.flatMap(_.get(w.name)).contains(0L)
         r <- f.stats.flatMap(_.get(w.name))
       } yield (cur.sparkType, r)

@@ -8,7 +8,7 @@ import SourceScan.{filesContaining, filesWhere, mainRoot}
   * and only the driver gets slower, so nothing else would catch them.
   *  - One-argument `ParquetFileReader.open(inputFile)` builds a fresh
   *    Hadoop `Configuration` (re-parsing core-default.xml) per footer;
-  *    opens pass `GraftIO.parquetReadOptions`.
+  *    opens pass read options built over `GraftIO.conf`.
   *  - Hadoop `FileSystem.listFiles` wraps each entry in a
   *    `LocatedFileStatus`, which on the local filesystem forks a
   *    permission probe per file; the table layer lists through

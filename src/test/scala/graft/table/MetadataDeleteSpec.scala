@@ -219,6 +219,26 @@ class MetadataDeleteSpec extends SparkTestBase {
     assert(a.read(spark).count() === 1)
   }
 
+  test("a dropped and re-added column: old files match its default or NULL, never old stats") {
+    // every old file's manifest still holds the dropped column's stats
+    // and null counts under "id", while its rows read the new id as the
+    // initial default (7) or NULL — pruning on the old entries would
+    // keep matching rows
+    for ((default, where) <- Seq(Some("7") -> "id = 7", None -> "id IS NULL")) {
+      val (c, a, b) = fixture()
+      Seq(a, b).foreach { t =>
+        t.dropColumn("id")
+        t.addColumn("id", LongType, default)
+      }
+      val all = 18 * 4 + 20 + 3
+      val files = a.meta.currentSnapshot.get.manifest.size
+      assert(spark.sql(s"SELECT count(*) FROM $c.db.a WHERE $where").head().getLong(0) === all)
+      deleteBoth(c, a, b, where)
+      assert(a.read(spark).count() === 0, where)
+      assert(removed(a).size === files, where)
+    }
+  }
+
   test("provesAll: strict comparisons stay strict; only conjunctions of exact-typed proofs count") {
     val ts = ColRange("2024-01-01 00:30:00.000000", "2024-01-01 17:30:00.000000")
     val stats: String => Option[(DataType, ColRange)] = Map(
@@ -251,5 +271,10 @@ class MetadataDeleteSpec extends SparkTestBase {
     assert(!proves(LessThan("n", 100.0)))
     assert(!proves(LessThan("ts", java.sql.Date.valueOf("2024-02-01"))))
     assert(!FilterBounds.provable(StringType) && !FilterBounds.provable(DoubleType))
+    // past year 9999 the timestamp rendering widens to '+10000-…', where
+    // byte order is no longer time order: nothing is proven
+    val far = ColRange("2024-01-01 00:30:00.000000", "+10000-01-01 00:00:00.000000")
+    assert(!FilterBounds.provesAll(LessThan("ts", Timestamp.valueOf("2025-01-01 00:00:00")),
+      Map("ts" -> (TimestampType: DataType, far)).get))
   }
 }
