@@ -4,6 +4,7 @@ import graft.Tables
 import graft.table.{GraftCatalog, GraftTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
 
 /** Driver-judged queries exercising the Graft table layer end-to-end
@@ -236,7 +237,15 @@ object TableQueries {
       t0.append(Tables.events(s, d))
       t0
     }
-    t.readDayRange(s, "ts", "2024-01-05", "2024-01-09")
+    // days [01-05, 01-09] as session-time-zone instants: planFilters
+    // keeps the files that may hold them (day values with a ±1-day
+    // time-zone margin, ts min/max exactly), the filter picks the rows
+    val zone = java.time.ZoneId.of(s.conf.get("spark.sql.session.timeZone"))
+    def midnight(day: String) = java.time.LocalDate.parse(day).atStartOfDay(zone).toInstant
+    t.readPruned(s, Seq(GreaterThanOrEqual("ts", midnight("2024-01-05")),
+        LessThan("ts", midnight("2024-01-10"))))
+      .filter(to_date(col("ts")) >= lit("2024-01-05").cast(DateType) &&
+        to_date(col("ts")) <= lit("2024-01-09").cast(DateType))
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
       .orderBy(col("event_id"))
   }
@@ -1076,8 +1085,16 @@ object TableQueries {
         zorderBy = Seq("o_orderkey", "o_custkey"))
       t0
     }
-    ordered(t.readColRange(s, "o_custkey", "100", "500"))
+    ordered(custkeyRange(s, t))
   }
+
+  /** Stats-pruned read of o_custkey in [100, 500]: planFilters drops
+    * the files whose min/max miss the range, the filter keeps the rows. */
+  private def custkeyRange(s: SparkSession, t: GraftTable): DataFrame =
+    t.readPruned(s, Seq(GreaterThanOrEqual("o_custkey", 100L),
+        LessThanOrEqual("o_custkey", 500L)))
+      .filter(col("o_custkey") >= lit("100").cast(LongType) &&
+        col("o_custkey") <= lit("500").cast(LongType))
 
   /** H1+C4: full lifecycle then history — deterministic columns only
     * (snapshot ids, operations, row counts; timestamps excluded). After
@@ -1279,7 +1296,7 @@ object TableQueries {
       t0.append(Tables.orders(s, d))
       t0
     }
-    ordered(t.readColRange(s, "o_custkey", "100", "500"))
+    ordered(custkeyRange(s, t))
   }
 
   /** Safe type widening (ALTER COLUMN TYPE): ints written as INT are

@@ -57,33 +57,29 @@ private[graft] object FilterBounds {
     case _ => None
   }
 
-  /** Conjunctive bounds per column. Bounds from strict comparisons are
-    * widened to inclusive — pruning only needs CAN-this-file-match. */
-  def collect(filters: Seq[Filter]): Map[String, Bound] = {
-    val acc = mutable.Map.empty[String, Bound]
-    def add(c: String, lo: Option[String], hi: Option[String]): Unit = {
-      val b = acc.getOrElse(c, Bound(None, None))
-      // intersect: max of los, min of his (string space is ordered
-      // consistently per column because all values render the same way)
-      val nlo = (b.lo ++ lo).reduceOption((a, x) => if (a >= x) a else x)
-      val nhi = (b.hi ++ hi).reduceOption((a, x) => if (a <= x) a else x)
-      acc(c) = Bound(nlo, nhi)
-    }
-    def walk(f: Filter): Unit = f match {
-      case And(l, r)                => walk(l); walk(r)
-      case EqualTo(c, v)            => render(v).foreach(s => add(c, Some(s), Some(s)))
-      case EqualNullSafe(c, v)      => render(v).foreach(s => add(c, Some(s), Some(s)))
-      case GreaterThan(c, v)        => render(v).foreach(s => add(c, Some(s), None))
-      case GreaterThanOrEqual(c, v) => render(v).foreach(s => add(c, Some(s), None))
-      case LessThan(c, v)           => render(v).foreach(s => add(c, None, Some(s)))
-      case LessThanOrEqual(c, v)    => render(v).foreach(s => add(c, None, Some(s)))
+  /** One (column, bound) per conjunctive range/equality predicate, in
+    * filter order. A file may match the conjunction only if it may match
+    * every conjunct, so a pruner checks each bound on its own — no
+    * intersection, which would need the column's order. Bounds from
+    * strict comparisons are widened to inclusive — pruning only needs
+    * CAN-this-file-match. */
+  def collect(filters: Seq[Filter]): Seq[(String, Bound)] = {
+    def on(c: String, v: Any)(b: String => Bound): Seq[(String, Bound)] =
+      render(v).toSeq.map(s => c -> b(s))
+    def walk(f: Filter): Seq[(String, Bound)] = f match {
+      case And(l, r)                => walk(l) ++ walk(r)
+      case EqualTo(c, v)            => on(c, v)(s => Bound(Some(s), Some(s)))
+      case EqualNullSafe(c, v)      => on(c, v)(s => Bound(Some(s), Some(s)))
+      case GreaterThan(c, v)        => on(c, v)(s => Bound(Some(s), None))
+      case GreaterThanOrEqual(c, v) => on(c, v)(s => Bound(Some(s), None))
+      case LessThan(c, v)           => on(c, v)(s => Bound(None, Some(s)))
+      case LessThanOrEqual(c, v)    => on(c, v)(s => Bound(None, Some(s)))
       // In is deliberately NOT pruned: min/max over the value set needs
       // type-aware ordering (string min of {"9","10"} is wrong for
       // numerics) — not worth the risk for a filter Spark re-applies.
-      case _ => () // Or / Not / In / IsNull / string patterns: no pruning
+      case _ => Nil // Or / Not / In / IsNull / string patterns: no pruning
     }
-    filters.foreach(walk)
-    acc.toMap
+    filters.flatMap(walk)
   }
 
   /** Conjunctive IS NULL / IS NOT NULL predicates per column

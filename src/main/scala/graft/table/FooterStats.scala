@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
 /** Footer-based statistics harvesting: row counts and per-column
   * [min, max] straight from parquet metadata — O(1) IO per file, no data
   * re-read. Values are rendered into the same sortable string space the
-  * planner compares in (`planColRange`): numerics via BigDecimal,
+  * planner compares in (`GraftTable.planFilters`): numerics via BigDecimal,
   * timestamps as fixed-width UTC `yyyy-MM-dd HH:mm:ss.SSSSSS`, strings
   * verbatim. Columns whose physical encoding has no usable stats (e.g.
   * INT96 timestamps) are simply omitted — pruning stays conservative.

@@ -51,67 +51,32 @@ final class GraftTable(val dir: HPath) {
   // ---------------------------------------------------------------- read
 
   /** C2 current-snapshot read (README.md:216). */
-  def read(spark: SparkSession): DataFrame = readSnapshot(spark, meta.currentSnapshot)
+  def read(spark: SparkSession): DataFrame = {
+    val m = meta
+    readSnapshot(spark, m, m.currentSnapshot)
+  }
 
   /** C3 time travel — `VERSION AS OF <snapshot_id>` (README.md:255-258). */
-  def readVersion(spark: SparkSession, snapshotId: Long): DataFrame =
-    readSnapshot(spark, Some(meta.snapshot(snapshotId)))
+  def readVersion(spark: SparkSession, snapshotId: Long): DataFrame = {
+    val m = meta
+    readSnapshot(spark, m, Some(m.snapshot(snapshotId)))
+  }
 
   /** C3 time travel — `TIMESTAMP AS OF`: the latest snapshot committed at
     * or before the given epoch-millis instant. */
   def readAsOf(spark: SparkSession, tsMillis: Long): DataFrame = {
     val m = meta
-    val snap = m.snapshots.filter(_.timestampMs <= tsMillis)
-      .sortBy(_.snapshotId).lastOption
-      .getOrElse(throw new IllegalArgumentException(
-        s"no snapshot of ${m.name} at or before $tsMillis"))
-    readSnapshot(spark, Some(snap))
+    readSnapshot(spark, m, Some(snapshotAsOf(m, tsMillis)))
   }
 
   /** The snapshot id TIMESTAMP AS OF would resolve to (for SQL wiring). */
-  def snapshotIdAsOf(tsMillis: Long): Long = {
-    val m = meta
+  def snapshotIdAsOf(tsMillis: Long): Long = snapshotAsOf(meta, tsMillis).snapshotId
+
+  private def snapshotAsOf(m: TableMeta, tsMillis: Long): Snapshot =
     m.snapshots.filter(_.timestampMs <= tsMillis)
       .sortBy(_.snapshotId).lastOption
       .getOrElse(throw new IllegalArgumentException(
-        s"no snapshot of ${m.name} at or before $tsMillis")).snapshotId
-  }
-
-  /** Hidden-partition pruned read (README.md:304-307): files are selected
-    * by their recorded `days()` partition value BEFORE Spark plans the
-    * scan, then the residual predicate still applies (pruning is an
-    * optimization, never a semantic change). [fromDay, toDay] inclusive,
-    * ISO dates. */
-  def readDayRange(spark: SparkSession, sourceCol: String, fromDay: String, toDay: String): DataFrame = {
-    val m = meta
-    val files = planDayRange(m, sourceCol, fromDay, toDay)
-    val df =
-      if (files.isEmpty) readFiles(spark, m, Nil)
-      else readLive(spark, m, files).drop("_graft_fp", "_graft_pos")
-    df.filter(
-      to_date(col(sourceCol)) >= lit(fromDay).cast(DateType) &&
-        to_date(col(sourceCol)) <= lit(toDay).cast(DateType))
-  }
-
-  /** File-pruning planner, exposed for tests/explain: which files survive
-    * a [fromDay, toDay] filter on `sourceCol`. Files with no recorded
-    * value for the field (written before ADD PARTITION FIELD) are kept —
-    * correctness first, pruning only where stats exist. */
-  def planDayRange(m: TableMeta, sourceCol: String, fromDay: String, toDay: String): Seq[DataFile] = {
-    val fieldName = m.partitionFields
-      .find(pf => pf.transform == "days" &&
-        m.currentSchema.exists(c => c.id == pf.sourceId && c.name == sourceCol))
-      .map(_.name)
-    val files = m.currentSnapshot.map(_.manifest).getOrElse(Nil)
-    fieldName match {
-      case None => files
-      case Some(f) =>
-        files.filter(_.partitionValues.get(f) match {
-          case Some(day) => day >= fromDay && day <= toDay // ISO order = date order
-          case None      => true
-        })
-    }
-  }
+        s"no snapshot of ${m.name} at or before $tsMillis"))
 
   /** Per-file view of a current-schema column: the column as file `f`'s
     * written schema holds it (same column id), or None when the file
@@ -127,46 +92,20 @@ final class GraftTable(val dir: HPath) {
         .get(id))
   }
 
-  /** Stats-based file pruning (data skipping): keep only files whose
-    * recorded [min, max] for `colName` intersects [lo, hi]. Comparison is
-    * typed (`FilterBounds.compare`: numeric → BigDecimal, else unsigned
-    * UTF-8 bytes — the footer stats order). Files without stats are
-    * kept. Most effective after a sorted compaction (disjoint ranges). */
-  def planColRange(m: TableMeta, colName: String, lo: String, hi: String): Seq[DataFile] = {
-    val numeric = m.currentSchema.find(_.name == colName).exists(_.sparkType match {
-      case _: NumericType => true
-      case _ => false
-    })
-    def lte(a: String, b: String): Boolean = FilterBounds.compare(numeric, a, b) <= 0
-    val written = writtenColumn(m)
-    m.currentSnapshot.map(_.manifest).getOrElse(Nil).filter { f =>
-      written(f, colName).flatMap(w => f.stats.flatMap(_.get(w.name))) match {
-        case Some(ColRange(mn, mx)) => lte(mn, hi) && lte(lo, mx)
-        case None                   => true // no stats: cannot skip safely
-      }
-    }
-  }
+  /** Current-schema column names whose stats compare as numbers
+    * (`FilterBounds.compare`'s `numeric` flag). */
+  private def numericColumns(m: TableMeta): Set[String] =
+    m.currentSchema.filter(_.sparkType.isInstanceOf[NumericType]).map(_.name).toSet
 
-  /** Pruned range read on any stats-tracked column; semantics identical
-    * to read().filter(col between lo and hi) — pruning only skips files
-    * that cannot contain matches. */
-  def readColRange(spark: SparkSession, colName: String, lo: String, hi: String): DataFrame = {
-    val m = meta
-    val files = planColRange(m, colName, lo, hi)
-    val dt = m.currentSchema.find(_.name == colName)
-      .getOrElse(throw new IllegalArgumentException(s"no column $colName")).sparkType
-    val df =
-      if (files.isEmpty) readFiles(spark, m, Nil)
-      else readLive(spark, m, files).drop("_graft_fp", "_graft_pos")
-    df.filter(col(colName) >= lit(lo).cast(dt) && col(colName) <= lit(hi).cast(dt))
-  }
-
-  /** DSv2 pushdown entry point: prune the manifest with DataSource
-    * `Filter`s (the predicates Spark pushes through
-    * SupportsPushDownFilters), combining per-file column stats and hidden
-    * day-partition values. Conservative: only conjunctive range/equality
-    * bounds prune; anything else keeps the file. Spark re-applies every
-    * filter post-scan, so pruning is an optimization, never semantics. */
+  /** The table's one file planner: prune the current manifest with
+    * DataSource `Filter`s (the predicates Spark pushes through
+    * SupportsPushDownFilters), combining per-file column stats, null
+    * counts, hidden-partition values and Bloom sidecars. Conservative:
+    * only conjunctive range/equality/nullness predicates prune; anything
+    * else keeps the file. Each conjunct's bound is checked on its own,
+    * which is exactly the check of their intersection. Callers re-apply
+    * every filter (Spark does for pushed ones), so pruning is an
+    * optimization, never semantics. */
   def planFilters(m: TableMeta, filters: Seq[org.apache.spark.sql.sources.Filter]): Seq[DataFile] = {
     val all = m.currentSnapshot.map(_.manifest).getOrElse(Nil)
     val bounds = FilterBounds.collect(filters)
@@ -176,6 +115,7 @@ final class GraftTable(val dir: HPath) {
     // partition source column name -> its transform field
     val partFields = m.partitionFields.flatMap(pf =>
       m.currentSchema.find(_.id == pf.sourceId).map(c => c.name -> pf)).toMap
+    val numeric = numericColumns(m)
     val written = writtenColumn(m)
     all.filter { f =>
       // the name this file's stats, null counts and Bloom keys use
@@ -191,11 +131,8 @@ final class GraftTable(val dir: HPath) {
         }
       }
       nullsOk && bounds.forall { case (cname, b) =>
-        val numeric = m.currentSchema.find(_.name == cname).exists(_.sparkType match {
-          case _: NumericType => true
-          case _ => false
-        })
-        def lte(a: String, bb: String): Boolean = FilterBounds.compare(numeric, a, bb) <= 0
+        def lte(a: String, bb: String): Boolean =
+          FilterBounds.compare(numeric(cname), a, bb) <= 0
         val statsOk = key(cname).flatMap(n => f.stats.flatMap(_.get(n))) match {
           case Some(ColRange(mn, mx)) =>
             b.lo.forall(lo => lte(lo, mx)) && b.hi.forall(hi => lte(mn, hi))
@@ -207,7 +144,7 @@ final class GraftTable(val dir: HPath) {
           .flatMap(pf => f.partitionValues.get(pf.name).map(pf -> _)) match {
           case Some((pf, pv)) =>
             Transforms.keepFile(pf.transform, pv, b, eqLiterals.get(cname),
-              numeric, (a, bb) => FilterBounds.compare(numeric = false, a, bb) <= 0)
+              numeric(cname), (a, bb) => FilterBounds.compare(numeric = false, a, bb) <= 0)
           case None => true
         }
         // Point-lookup skipping: a per-file Bloom sidecar answers
@@ -227,13 +164,14 @@ final class GraftTable(val dir: HPath) {
     }
   }
 
-  /** Filter-pruned current-snapshot read (the DSv2 scan body), MoR
-    * deletes applied. */
+  /** Current-snapshot live rows (MoR deletes applied) of the files
+    * `planFilters` keeps for `filters` — the DSv2 scan body. It only
+    * prunes FILES: kept files return all their live rows, so the caller
+    * must still apply the predicate (Spark does for pushed filters). */
   def readPruned(spark: SparkSession, filters: Seq[org.apache.spark.sql.sources.Filter]): DataFrame = {
     val m = meta
-    val files = planFilters(m, filters)
-    if (files.isEmpty) readFiles(spark, m, Nil)
-    else readLive(spark, m, files).drop("_graft_fp", "_graft_pos")
+    readLive(spark, m, m.currentSnapshot, planFilters(m, filters))
+      .drop("_graft_fp", "_graft_pos")
   }
 
   /** Metadata-only aggregation: COUNT(*) plus per-column MIN/MAX
@@ -265,20 +203,20 @@ final class GraftTable(val dir: HPath) {
             snap.deleteVectors.exists(_.nonEmpty)) return None
         val files = snap.manifest
         val written = writtenColumn(m)
+        val numeric = numericColumns(m)
         val minMax = cols.flatMap { cname =>
           m.currentSchema.find(_.name == cname).flatMap { cd =>
             cd.sparkType match {
               case StringType => None
-              case dt =>
+              case _ =>
                 val ranges = files.map(f =>
                   written(f, cname).flatMap(w => f.stats.flatMap(_.get(w.name))))
                 if (files.nonEmpty && ranges.forall(_.isDefined)) {
                   val rs = ranges.flatten
-                  val numeric = dt.isInstanceOf[NumericType]
                   def lo(a: String, b: String) =
-                    if (FilterBounds.compare(numeric, a, b) <= 0) a else b
+                    if (FilterBounds.compare(numeric(cname), a, b) <= 0) a else b
                   def hi(a: String, b: String) =
-                    if (FilterBounds.compare(numeric, a, b) >= 0) a else b
+                    if (FilterBounds.compare(numeric(cname), a, b) >= 0) a else b
                   Some(cname -> ColRange(
                     rs.map(_.min).reduce(lo), rs.map(_.max).reduce(hi)))
                 } else None
@@ -358,25 +296,15 @@ final class GraftTable(val dir: HPath) {
         s"unknown metadata table $other (history | snapshots | files | partitions | refs)")
   }
 
-  private def readSnapshot(spark: SparkSession, snap: Option[Snapshot]): DataFrame = {
-    val m = meta
-    def empty = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), m.sparkSchema(m.currentSchemaId))
-    snap.filter(_.manifest.nonEmpty).fold(empty) { s =>
-      val needPos = s.allDeleteFiles.nonEmpty || s.allEqDeleteFiles.nonEmpty ||
-        s.allDeleteVectors.nonEmpty
-      if (!needPos) readFiles(spark, m, s.manifest)
-      else {
-        val base = readFiles(spark, m, s.manifest, withPos = true)
-        val posApplied = deleteEntries(spark, s)
-          .fold(base)(d => base
-            .withColumn("_graft_dfp", substring_index(col("_graft_fp"), "/data/", -1))
-            .join(d, Seq("_graft_dfp", "_graft_pos"), "left_anti")
-            .drop("_graft_dfp"))
-        applyEqDeletes(spark, s, posApplied).drop("_graft_fp", "_graft_pos")
-      }
+  /** Live rows of `snap` under the current schema. A snapshot without
+    * delete files of any kind reads its files without row positions. */
+  private def readSnapshot(spark: SparkSession, m: TableMeta, snap: Option[Snapshot]): DataFrame =
+    snap match {
+      case Some(s) if s.allDeleteFiles.nonEmpty || s.allEqDeleteFiles.nonEmpty ||
+          s.allDeleteVectors.nonEmpty =>
+        readLive(spark, m, snap, s.manifest).drop("_graft_fp", "_graft_pos")
+      case _ => readFiles(spark, m, snap.map(_.manifest).getOrElse(Nil))
     }
-  }
 
   /** Anti-join away equality-deleted rows: for each equality delete file,
     * rows whose key tuple matches AND whose data file is OLDER than the
@@ -501,18 +429,59 @@ final class GraftTable(val dir: HPath) {
       .toDF("_graft_dfp", "_graft_pos"))
   }
 
-  /** MoR-merged live rows of `files` under the current snapshot, KEEPING
-    * the _graft_fp/_graft_pos helper columns (CoW ops use _graft_fp for
-    * affected-file detection; callers must drop/project them away). */
-  private def readLive(spark: SparkSession, m: TableMeta, files: Seq[DataFile]): DataFrame = {
-    if (files.isEmpty) return readFiles(spark, m, Nil)
-    val base = readFiles(spark, m, files, withPos = true)
-    val posApplied = m.currentSnapshot.flatMap(deleteEntries(spark, _))
-      .fold(base)(d => base
-            .withColumn("_graft_dfp", substring_index(col("_graft_fp"), "/data/", -1))
-            .join(d, Seq("_graft_dfp", "_graft_pos"), "left_anti")
-            .drop("_graft_dfp"))
-    m.currentSnapshot.fold(posApplied)(applyEqDeletes(spark, _, posApplied))
+  /** The one live-row reader: rows of `files` with `snap`'s
+    * merge-on-read deletes applied — positional files and deletion
+    * vectors by a (file, position) anti-join, then equality deletes —
+    * KEEPING the _graft_fp/_graft_pos helper columns (CoW ops use
+    * _graft_fp for affected-file detection; callers must drop/project
+    * them away). `snap` is the snapshot whose deletes apply: the current
+    * one for reads and writes, an older one for time travel and the
+    * changelog.
+    *
+    * With `lineage`, rows also carry v3 row lineage resolved BEFORE the
+    * deletes: `_graft_row_id` / `_graft_last_seq` are the materialized
+    * values when the file has them, else the firstRowId+position /
+    * file-seq derivation. Lineage-preserving rewrites feed writeFiles
+    * from this so row identity survives the rewrite physically. */
+  private def readLive(spark: SparkSession, m: TableMeta, snap: Option[Snapshot],
+      files: Seq[DataFile], lineage: Boolean = false): DataFrame = {
+    if (files.isEmpty) return readFiles(spark, m, Nil, lineage = lineage)
+    val read = readFiles(spark, m, files, withPos = true, lineage = lineage)
+    val base = if (!lineage) read else {
+      // The suffix-keyed lineage lookup below fans out (DUPLICATING every
+      // row through CoW delete/update/rewrite) if two manifest entries
+      // share a post-/data/ suffix — refuse loudly, like the MoR paths do.
+      requireUniqueSuffixes(files, op = "lineage-preserving rewrite")
+      // manifest-sized broadcast: per-file firstRowId + seq feed the
+      // derivation for rows whose file has no materialized lineage
+      val lkRows = files.map(f =>
+        (dataSuffix(f.path), f.firstRowId.getOrElse(-1L), f.seq.getOrElse(0L)))
+      val lk = broadcast(spark.createDataFrame(lkRows)
+        .toDF("_graft_rel", "_graft_frid", "_graft_fseq"))
+      read
+        .withColumn("_graft_rel", substring_index(col("_graft_fp"), "/data/", -1))
+        // LEFT join, like the eq-delete seq lookup: an externally-
+        // registered absolute path (add_files) has no "/data/" suffix and
+        // its scan URI renders with a scheme the manifest path lacks — an
+        // inner join would silently DROP those rows from every lineage-
+        // preserving rewrite (caught by q_table_addf_cow's oracle); left
+        // keeps them with NULL lineage ("unknown identity" is honest for
+        // borrowed files, losing rows is not)
+        .join(lk, Seq("_graft_rel"), "left")
+        .withColumn("_graft_row_id",
+          coalesce(col("_graft_row_id"),
+            when(col("_graft_frid") >= 0, col("_graft_frid") + col("_graft_pos"))))
+        .withColumn("_graft_last_seq",
+          coalesce(col("_graft_last_seq"), col("_graft_fseq")))
+        .drop("_graft_rel", "_graft_frid", "_graft_fseq")
+    }
+    snap.fold(base) { s =>
+      val posApplied = deleteEntries(spark, s).fold(base)(d => base
+        .withColumn("_graft_dfp", substring_index(col("_graft_fp"), "/data/", -1))
+        .join(d, Seq("_graft_dfp", "_graft_pos"), "left_anti")
+        .drop("_graft_dfp"))
+      applyEqDeletes(spark, s, posApplied)
+    }
   }
 
   /** Read a set of data files, resolving each file's columns to the
@@ -524,9 +493,18 @@ final class GraftTable(val dir: HPath) {
       spark: SparkSession, m: TableMeta, files: Seq[DataFile],
       withPos: Boolean = false, lineage: Boolean = false): DataFrame = {
     val current = m.currentSchema
+    // reserved physical lineage columns: present only in files a
+    // lineage-preserving rewrite materialized; declared in the read
+    // schema so plain files surface them as NULL and the consumer
+    // coalesces to the firstRowId+pos / file-seq derivation
+    def readSchema(sid: Int): StructType =
+      if (!lineage) m.sparkSchema(sid)
+      else m.sparkSchema(sid)
+        .add(StructField("_graft_row_id", LongType))
+        .add(StructField("_graft_last_seq", LongType))
     if (files.isEmpty)
       return spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), m.sparkSchema(m.currentSchemaId))
+        new java.util.ArrayList[org.apache.spark.sql.Row](), readSchema(m.currentSchemaId))
     val groups = files.groupBy(_.schemaId)
     groups.map { case (sid, fs) =>
       val writeSchema = m.schemaAt(sid)
@@ -544,19 +522,10 @@ final class GraftTable(val dir: HPath) {
         Seq(col("_metadata.file_path").as("_graft_fp"),
           col("_metadata.row_index").as("_graft_pos"))
       else Nil) ++ (if (lineage)
-        // reserved physical lineage columns: present only in files a
-        // lineage-preserving rewrite materialized; declared in the read
-        // schema so plain files surface them as NULL and the consumer
-        // coalesces to the firstRowId+pos / file-seq derivation
         Seq(col("_graft_row_id"), col("_graft_last_seq"))
       else Nil)
-      val readSchema =
-        if (!lineage) m.sparkSchema(sid)
-        else m.sparkSchema(sid)
-          .add(StructField("_graft_row_id", LongType))
-          .add(StructField("_graft_last_seq", LongType))
       spark.read
-        .schema(readSchema)
+        .schema(readSchema(sid))
         .parquet(fs.map(f => dir.resolve(f.path).toString): _*)
         .select(projection: _*)
     }.reduce(_.unionByName(_))
@@ -575,63 +544,11 @@ final class GraftTable(val dir: HPath) {
     * paths. */
   def readWithLineage(spark: SparkSession): DataFrame = {
     val m = meta
-    val snapOpt = m.currentSnapshot.filter(_.manifest.nonEmpty)
-    val schemaCols = m.currentSchema.map(c => col(c.name))
-    def empty = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      m.sparkSchema(m.currentSchemaId)
-        .add(StructField("_row_id", LongType))
-        .add(StructField("_last_updated_sequence_number", LongType)))
-    snapOpt.fold(empty) { snap =>
-      readLiveLineage(spark, m, snap.manifest)
-        .select(schemaCols ++ Seq(
-          col("_graft_row_id").as("_row_id"),
-          col("_graft_last_seq").as("_last_updated_sequence_number")): _*)
-    }
-  }
-
-  /** readLive's lineage twin: live rows of `files` under the current
-    * snapshot CARRYING resolved `_graft_row_id` / `_graft_last_seq`
-    * (materialized values when the file has them, else the
-    * firstRowId+position / file-seq derivation) plus the _graft_fp/_pos
-    * helpers. Lineage-preserving rewrites feed writeFiles from this so
-    * row identity survives the rewrite physically. */
-  private def readLiveLineage(spark: SparkSession, m: TableMeta,
-      files: Seq[DataFile]): DataFrame = {
-    if (files.isEmpty) return readFiles(spark, m, Nil)
-    // The suffix-keyed lineage lookup below fans out (DUPLICATING every
-    // row through CoW delete/update/rewrite) if two manifest entries
-    // share a post-/data/ suffix — refuse loudly, like the MoR paths do.
-    requireUniqueSuffixes(files, op = "lineage-preserving rewrite")
-    val base = readFiles(spark, m, files, withPos = true, lineage = true)
-    // manifest-sized broadcast: per-file firstRowId + seq feed the
-    // derivation for rows whose file has no materialized lineage
-    val lkRows = files.map(f =>
-      (dataSuffix(f.path), f.firstRowId.getOrElse(-1L), f.seq.getOrElse(0L)))
-    val lk = broadcast(spark.createDataFrame(lkRows)
-      .toDF("_graft_rel", "_graft_frid", "_graft_fseq"))
-    val withIds = base
-      .withColumn("_graft_rel", substring_index(col("_graft_fp"), "/data/", -1))
-      // LEFT join, like the eq-delete seq lookup: an externally-
-      // registered absolute path (add_files) has no "/data/" suffix and
-      // its scan URI renders with a scheme the manifest path lacks — an
-      // inner join would silently DROP those rows from every lineage-
-      // preserving rewrite (caught by q_table_addf_cow's oracle); left
-      // keeps them with NULL lineage ("unknown identity" is honest for
-      // borrowed files, losing rows is not)
-      .join(lk, Seq("_graft_rel"), "left")
-      .withColumn("_graft_row_id",
-        coalesce(col("_graft_row_id"),
-          when(col("_graft_frid") >= 0, col("_graft_frid") + col("_graft_pos"))))
-      .withColumn("_graft_last_seq",
-        coalesce(col("_graft_last_seq"), col("_graft_fseq")))
-      .drop("_graft_rel", "_graft_frid", "_graft_fseq")
-    val posApplied = m.currentSnapshot.flatMap(deleteEntries(spark, _))
-      .fold(withIds)(d => withIds
-        .withColumn("_graft_dfp", substring_index(col("_graft_fp"), "/data/", -1))
-        .join(d, Seq("_graft_dfp", "_graft_pos"), "left_anti")
-        .drop("_graft_dfp"))
-    m.currentSnapshot.fold(posApplied)(applyEqDeletes(spark, _, posApplied))
+    val snap = m.currentSnapshot
+    readLive(spark, m, snap, snap.map(_.manifest).getOrElse(Nil), lineage = true)
+      .select(m.currentSchema.map(c => col(c.name)) ++ Seq(
+        col("_graft_row_id").as("_row_id"),
+        col("_graft_last_seq").as("_last_updated_sequence_number")): _*)
   }
 
   // --------------------------------------------------------------- write
@@ -1076,7 +993,7 @@ final class GraftTable(val dir: HPath) {
     // readLive: earlier MoR-deleted rows must not resurrect in the rewrite
     val affected =
       if (probe.isEmpty) Nil
-      else matchAffected(probe, readLive(spark, m, probe).filter(pred)
+      else matchAffected(probe, readLive(spark, m, m.currentSnapshot, probe).filter(pred)
         .select(col("_graft_fp")).distinct()
         .collect().map(_.getString(0)).toSet)
     if (dropped.isEmpty && affected.isEmpty) return
@@ -1087,7 +1004,7 @@ final class GraftTable(val dir: HPath) {
     // v3's CoW obligation.
     val newFiles =
       if (affected.isEmpty) Nil
-      else writeFiles(spark, m, readLiveLineage(spark, m, affected)
+      else writeFiles(spark, m, readLive(spark, m, m.currentSnapshot, affected, lineage = true)
         .filter(!coalesce(pred, lit(false)))
         .select(m.currentSchema.map(c => col(c.name)) ++
           Seq(col("_graft_row_id"), col("_graft_last_seq")): _*),
@@ -1139,7 +1056,7 @@ final class GraftTable(val dir: HPath) {
     if (manifest.isEmpty) return
     requireUniqueSuffixes(manifest)
     val entries = writeDeleteParquet("d",
-      readLive(spark, m, manifest)
+      readLive(spark, m, m.currentSnapshot, manifest)
         .filter(coalesce(pred, lit(false)))
         .select(col("_graft_fp").as("file_path"), col("_graft_pos").as("pos")))
       .map { case (rel, rows) => DataFile(rel, rows, m.currentSchemaId, Map.empty) }
@@ -1168,7 +1085,7 @@ final class GraftTable(val dir: HPath) {
     // readLive: rows already dead (prior vectors, positional files,
     // eq-deletes) must not re-enter — new positions are disjoint from
     // the superseded vector's by construction
-    val matched = readLive(spark, m, manifest)
+    val matched = readLive(spark, m, m.currentSnapshot, manifest)
       .filter(coalesce(pred, lit(false)))
       .select(substring_index(col("_graft_fp"), "/data/", -1).as("_dv_sfx"),
         col("_graft_pos").as("_dv_pos"))
@@ -1326,7 +1243,7 @@ final class GraftTable(val dir: HPath) {
       require(m.currentSchema.exists(_.name == k), s"no column $k"))
     val manifest = m.currentSnapshot.map(_.manifest).getOrElse(Nil)
     if (manifest.isEmpty) return
-    val affectedPaths = readLive(spark, m, manifest).filter(pred)
+    val affectedPaths = readLive(spark, m, m.currentSnapshot, manifest).filter(pred)
       .select(col("_graft_fp")).distinct()
       .collect().map(_.getString(0)).toSet
     val affected = matchAffected(manifest, affectedPaths)
@@ -1337,7 +1254,8 @@ final class GraftTable(val dir: HPath) {
     // write last_seq NULL — "modified by this very commit" — which the
     // read side coalesces to the new file's seq (the v3 convention:
     // the writer can't know the commit's seq before the commit)
-    val rewritten = readLiveLineage(spark, m, affected).select(m.currentSchema.map { c =>
+    val live = readLive(spark, m, m.currentSnapshot, affected, lineage = true)
+    val rewritten = live.select(m.currentSchema.map { c =>
       assignments.get(c.name) match {
         case Some(e) => when(hit, e.cast(c.sparkType)).otherwise(col(c.name)).as(c.name)
         case None    => col(c.name)
@@ -1367,7 +1285,7 @@ final class GraftTable(val dir: HPath) {
     val manifest = m.currentSnapshot.map(_.manifest).getOrElse(Nil)
     if (manifest.isEmpty) return
     // one scan feeds both the position list and the updated copies
-    val matching = readLive(spark, m, manifest)
+    val matching = readLive(spark, m, m.currentSnapshot, manifest)
       .filter(coalesce(pred, lit(false))).persist()
     try {
       val delEntries = writeDeleteParquet("d",
@@ -1437,14 +1355,15 @@ final class GraftTable(val dir: HPath) {
       return
     }
     val keys = aligned.select(col(keyCol)).distinct()
-    val affectedPaths = readLive(spark, m, manifest)
+    val affectedPaths = readLive(spark, m, m.currentSnapshot, manifest)
       .join(keys, Seq(keyCol), "left_semi")
       .select(col("_graft_fp")).distinct()
       .collect().map(_.getString(0)).toSet
     val affected = matchAffected(manifest, affectedPaths)
     // affected files: keep only unmatched rows; matched rows come back
     // (updated) from `aligned`, which also carries the pure inserts
-    val kept = readLive(spark, m, affected).join(keys, Seq(keyCol), "left_anti")
+    val kept = readLive(spark, m, m.currentSnapshot, affected)
+      .join(keys, Seq(keyCol), "left_anti")
       .select(m.currentSchema.map(c => col(c.name)): _*)
     val newFiles = writeFiles(spark, m, kept.unionByName(aligned))
     TableMeta.commit(dir, v,
@@ -1482,7 +1401,7 @@ final class GraftTable(val dir: HPath) {
       if (manifest.isEmpty || (matched.isEmpty && notMatchedBySource.isEmpty))
         (Seq.empty[DataFile], false)
       else {
-        val probe = readLive(spark, m, manifest).alias("__graft_t")
+        val probe = readLive(spark, m, m.currentSnapshot, manifest).alias("__graft_t")
           .join(srcMarked, cond, "inner")
           .groupBy(col("_graft_fp"), col("_graft_pos"))
           .agg(count(lit(1)).as("__graft_n"))
@@ -1529,7 +1448,7 @@ final class GraftTable(val dir: HPath) {
             (isM && a.condition.getOrElse(lit(true)), i + 1) } ++
           notMatchedBySource.zipWithIndex.map { case (a, i) =>
             (!isM && a.condition.getOrElse(lit(true)), matched.size + i + 1) })
-        val j = readLive(spark, m, affected).alias("__graft_t")
+        val j = readLive(spark, m, m.currentSnapshot, affected).alias("__graft_t")
           .join(srcMarked, cond, "left_outer")
           .withColumn("__graft_act", act)
         val deleteIdxs = allActs.collect { case (a, i) if a.delete => i + 1 }
@@ -1546,7 +1465,8 @@ final class GraftTable(val dir: HPath) {
         val srcOnly =
           if (manifest.isEmpty) source.alias("__graft_s")
           else source.alias("__graft_s")
-            .join(readLive(spark, m, manifest).alias("__graft_t"), cond, "left_anti")
+            .join(readLive(spark, m, m.currentSnapshot, manifest).alias("__graft_t"),
+              cond, "left_anti")
         val act = firstApplicable(notMatched.zipWithIndex.map { case (a, i) =>
           (a.condition.getOrElse(lit(true)), i + 1) })
         val filtered = srcOnly.withColumn("__graft_act", act)
@@ -1577,7 +1497,7 @@ final class GraftTable(val dir: HPath) {
     * min/max) skip files on point/range lookups. With `zorderBy`, rows
     * are sorted by a Morton interleave of the named numeric columns
     * instead: min/max stats stay tight on EVERY listed column, so
-    * planColRange/planFilters prune on any of them — the multi-dimension
+    * planFilters prunes on any of them — the multi-dimension
     * layout a single-column sort can't give (Delta/Iceberg's OPTIMIZE
     * ZORDER). */
   def rewriteDataFiles(spark: SparkSession, targetFiles: Int = -1,
@@ -1616,7 +1536,7 @@ final class GraftTable(val dir: HPath) {
     // the new snapshot is pure data files again. Row lineage is
     // MATERIALIZED into the compacted files (ids + last-updated seqs
     // survive the relayout — v3's rewrite obligation).
-    val base = readLiveLineage(spark, m, manifest)
+    val base = readLive(spark, m, m.currentSnapshot, manifest, lineage = true)
       .select(m.currentSchema.map(c => col(c.name)) ++
         Seq(col("_graft_row_id"), col("_graft_last_seq")): _*)
     // preClustered: this method owns the row clustering — writeFiles must
@@ -1983,16 +1903,7 @@ final class GraftTable(val dir: HPath) {
       val eqDeletes =
         if (newEqFiles.isEmpty || prevManifest.isEmpty) None
         else {
-          val prevLive = {
-            val base = readFiles(spark, m, prevManifest, withPos = true)
-            val prevSnap = snaps(i - 1)
-            val posApplied = deleteEntries(spark, prevSnap)
-              .fold(base)(d => base
-            .withColumn("_graft_dfp", substring_index(col("_graft_fp"), "/data/", -1))
-            .join(d, Seq("_graft_dfp", "_graft_pos"), "left_anti")
-            .drop("_graft_dfp"))
-            applyEqDeletes(spark, prevSnap, posApplied)
-          }
+          val prevLive = readLive(spark, m, Some(snaps(i - 1)), prevManifest)
           val matched = newEqFiles.map { ed =>
             val keys = eqDeleteKeys(spark, ed)
             // null-safe match, same as applyEqDeletes: a delete keyed on
@@ -2459,8 +2370,8 @@ final class GraftTable(val dir: HPath) {
   /** Declared write sort order — Iceberg's `ALTER TABLE ... WRITE ORDERED
     * BY (cols)`: every subsequent append range-clusters and sorts rows by
     * these columns before writing, so per-file min/max footer stats are
-    * disjoint from the FIRST append on — stats pruning (planColRange /
-    * planFilters) works without waiting for a sorted compaction. The cost
+    * disjoint from the FIRST append on — stats pruning (planFilters)
+    * works without waiting for a sorted compaction. The cost
     * is one range shuffle per append, the same trade Iceberg documents.
     * Stored as column ids: renames don't break the order. Empty clears. */
   def setSortOrder(cols: Seq[String]): Unit =

@@ -1,0 +1,31 @@
+package graft
+
+import java.nio.file.Files
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import SourceScan.{mainRoot, scalaFiles}
+
+/** Source-scan guard against re-forking the table layer's read path:
+  * `GraftTable.planFilters` is the one file planner, and one live-row
+  * reader applies a snapshot's positional deletes and deletion vectors
+  * (the anti-join on `_graft_dfp`). A hand-copied twin drifts from the
+  * original without changing any result the specs see. */
+class OneReadPathSpec extends AnyFunSuite {
+
+  private val table = mainRoot.resolve("graft/table")
+
+  test("the positional-delete anti-join appears once in the table layer") {
+    val antiJoin = "\"_graft_dfp\"[^\n]*\"left_anti\"".r
+    val hits = scalaFiles(table).map { f =>
+      mainRoot.relativize(f).toString -> antiJoin.findAllIn(Files.readString(f)).size
+    }.filter(_._2 > 0)
+    assert(hits == Seq("graft/table/GraftTable.scala" -> 1))
+  }
+
+  test("GraftTable defines no special-case planner") {
+    val text = Files.readString(table.resolve("GraftTable.scala"))
+    Seq("planDayRange", "readDayRange", "planColRange", "readColRange")
+      .foreach(name => assert(!text.contains(s"def $name"), name))
+  }
+}

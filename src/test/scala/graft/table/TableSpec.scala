@@ -8,6 +8,7 @@ import graft.SparkTestBase
 import graft.table.GraftIO.RichHPath
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{And, GreaterThanOrEqual, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
 
 /** The reference's manual walkthrough (README.md sessions 3–7) replayed as
@@ -41,6 +42,17 @@ class TableSpec extends SparkTestBase {
     def asJava(): java.util.List[A] = {
       val l = new java.util.ArrayList[A](); s.foreach(l.add); l
     }
+  }
+
+  /** Pushed-filter form of `lo <= c <= hi`. */
+  private def between(c: String, lo: Any, hi: Any) =
+    Seq(GreaterThanOrEqual(c, lo), LessThanOrEqual(c, hi))
+
+  /** Pushed-filter form of "`c` falls on `day`" (session time zone). */
+  private def onDay(c: String, day: String) = {
+    val zone = java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))
+    val start = java.time.LocalDate.parse(day).atStartOfDay(zone)
+    Seq(GreaterThanOrEqual(c, start.toInstant), LessThan(c, start.plusDays(1).toInstant))
   }
 
   private def contentHash(df: DataFrame): Long =
@@ -121,11 +133,15 @@ class TableSpec extends SparkTestBase {
     assert(manifest.forall(_.partitionValues.contains("data_criacao_day")))
     assert(manifest.map(_.partitionValues("data_criacao_day")).distinct.size === 4)
 
-    val pruned = t.planDayRange(m, "data_criacao", "2024-05-10", "2024-05-10")
+    val may10 = onDay("data_criacao", "2024-05-10")
+    val pruned = t.planFilters(m, may10)
     assert(pruned.size < manifest.size)
-    assert(pruned.forall(_.partitionValues("data_criacao_day") == "2024-05-10"))
+    // day values prune with a ±1-day timezone margin
+    assert(pruned.exists(_.partitionValues("data_criacao_day") == "2024-05-10"))
+    assert(pruned.forall(f => Set("2024-05-09", "2024-05-10", "2024-05-11")
+      .contains(f.partitionValues("data_criacao_day"))))
 
-    val day = t.readDayRange(spark, "data_criacao", "2024-05-10", "2024-05-10")
+    val day = t.readPruned(spark, may10).filter(to_date(col("data_criacao")) === "2024-05-10")
     assert(day.count() === 2)
     // pruning is only an optimization: result equals a plain filter
     val plain = t.read(spark).filter(to_date(col("data_criacao")) === "2024-05-10")
@@ -141,10 +157,21 @@ class TableSpec extends SparkTestBase {
     t.append(pedidosDf.filter(col("id_pedido") === "p1")) // partitioned file
 
     val m = t.meta
-    val pruned = t.planDayRange(m, "data_criacao", "2024-05-10", "2024-05-10")
-    // old (no-stats) files kept; new file for 05-10 kept
-    assert(pruned.size === m.currentSnapshot.get.manifest.size)
-    assert(t.readDayRange(spark, "data_criacao", "2024-05-10", "2024-05-10").count() === 3)
+    val may10 = onDay("data_criacao", "2024-05-10")
+    val manifest = m.currentSnapshot.get.manifest
+    val pruned = t.planFilters(m, may10)
+    // the new 05-10 file is kept by its day value; old files have none,
+    // so only their min/max stats may drop them: every file holding a
+    // 05-10 row is kept, old ones included
+    def holdsMay10(f: DataFile): Boolean =
+      spark.read.parquet(t.localDir.resolve(f.path).toString)
+        .filter(to_date(col("data_criacao")) === "2024-05-10").count() > 0
+    val holding = manifest.filter(holdsMay10)
+    assert(holding.exists(!_.partitionValues.contains("data_criacao_day")))
+    assert(holding.exists(_.partitionValues.get("data_criacao_day").contains("2024-05-10")))
+    assert(holding.forall(pruned.contains))
+    assert(t.readPruned(spark, may10)
+      .filter(to_date(col("data_criacao")) === "2024-05-10").count() === 3)
   }
 
   test("expire_snapshots GCs orphaned files; rewrite_data_files compacts losslessly") {
@@ -210,13 +237,37 @@ class TableSpec extends SparkTestBase {
 
     val m = t.meta
     assert(m.currentSnapshot.get.manifest.forall(_.stats.exists(_.contains("valor"))))
-    val pruned = t.planColRange(m, "valor", "1000", "2000")
+    val range = between("valor", new java.math.BigDecimal(1000), new java.math.BigDecimal(2000))
+    val pruned = t.planFilters(m, range)
     assert(pruned.size === 1, s"expected 1 of 2 files, got ${pruned.size}")
 
-    val viaStats = t.readColRange(spark, "valor", "1000", "2000")
+    val viaStats = t.readPruned(spark, range)
+      .filter(col("valor") >= 1000 && col("valor") <= 2000)
     val plain = t.read(spark).filter(col("valor") >= 1000 && col("valor") <= 2000)
     assert(viaStats.collect().toSet === plain.collect().toSet)
     assert(viaStats.count() === 5)
+  }
+
+  test("planFilters checks each conjunct's bound on its own (numeric order, not string)") {
+    import spark.implicits._
+    val cat = newCatalog()
+    cat.createSchema("db")
+    val t = cat.createTable("db.conj", StructType(Seq(StructField("k", LongType))))
+    t.append((1L to 9L).toDF("k").coalesce(1))
+    t.append((10L to 20L).toDF("k").coalesce(1))
+    val m = t.meta
+    val files = m.currentSnapshot.get.manifest
+    assert(files.size === 2)
+    val high = files.filter(_.stats.flatMap(_.get("k")).exists(_.min == "10"))
+    // "9" >= "10" as strings: a string-order intersection kept lo = 9
+    // and with it the file whose max is 9
+    assert(t.planFilters(m, Seq(GreaterThanOrEqual("k", 9L), GreaterThanOrEqual("k", 10L))) === high)
+    assert(t.planFilters(m, Seq(And(GreaterThanOrEqual("k", 10L), GreaterThanOrEqual("k", 9L)))) === high)
+    assert(t.planFilters(m, Seq(LessThanOrEqual("k", 10L), LessThanOrEqual("k", 9L)))
+      .map(_.path) === files.filterNot(high.contains).map(_.path))
+    val got = t.readPruned(spark, Seq(GreaterThanOrEqual("k", 9L), GreaterThanOrEqual("k", 10L)))
+      .filter(col("k") >= 10).as[Long].collect().sorted.toSeq
+    assert(got === (10L to 20L))
   }
 
   test("overwrite replaces visible content; prior snapshots still travel") {
@@ -376,7 +427,7 @@ class TableSpec extends SparkTestBase {
       case _ => ()
     }
     // pruning works from the first append — no compaction needed
-    val pruned = t.planColRange(t.meta, "k", "100", "200")
+    val pruned = t.planFilters(t.meta, between("k", 100L, 200L))
     assert(pruned.size < files.size)
     assert(t.read(spark).count() === 4000)
     // sort order is id-resolved: a rename keeps it working
@@ -701,6 +752,35 @@ class TableSpec extends SparkTestBase {
     assert(t.read(spark).count() === 4)
   }
 
+  test("changelog: an equality delete emits only rows the earlier positional delete and vector left") {
+    import spark.implicits._
+    val cat = newCatalog()
+    cat.createSchema("db")
+    val t = cat.createTable("db.eqprior", pedidosSchema)
+    t.append(pedidosDf) // snapshot 1: p1..p5
+    t.deleteMoR(spark, col("id_pedido") === "p1") // 2: positional delete file
+    t.deleteMoRDv(spark, col("id_pedido") === "p2") // 3: deletion vector
+    t.deleteMoREquality(spark, Seq("p1", "p2", "p3").toDF("id_pedido")) // 4
+    val last = t.meta.currentSnapshot.get
+    assert(last.allDeleteFiles.nonEmpty && last.allDeleteVectors.nonEmpty &&
+      last.allEqDeleteFiles.nonEmpty)
+    def ids(df: DataFrame): Seq[String] =
+      df.select("id_pedido").as[String].collect().sorted.toSeq
+    val live = Seq(
+      Seq("p1", "p2", "p3", "p4", "p5"), Seq("p2", "p3", "p4", "p5"),
+      Seq("p3", "p4", "p5"), Seq("p4", "p5"))
+    val snapIds = t.meta.snapshots.map(_.snapshotId)
+    assert(snapIds.size === live.size)
+    snapIds.zip(live).foreach { case (id, want) =>
+      assert(ids(t.readVersion(spark, id)) === want, s"snapshot $id")
+    }
+    // snapshot 4's key file names p1 and p2 too, but they were dead
+    // already: only p3 is a change of that commit
+    val deletes = t.readChanges(spark, 1, 4).filter(col("_change_type") === "delete")
+      .select("id_pedido", "_commit_snapshot_id").as[(String, Long)].collect().sorted.toSeq
+    assert(deletes === Seq("p1", "p2", "p3").zip(snapIds.drop(1)))
+  }
+
   test("concurrent commit is detected (atomic CREATE_NEW version file)") {
     val cat = newCatalog()
     cat.createSchema("db")
@@ -868,7 +948,7 @@ class TableSpec extends SparkTestBase {
     // in place: manifest points INTO srcDir (absolute), nothing copied
     assert(t.meta.currentSnapshot.get.manifest.forall(_.path.startsWith(srcDir.toString)))
     // footer stats harvested -> stats pruning live on day one
-    val pruned = t.planColRange(t.meta, "quantidade", "3", "9")
+    val pruned = t.planFilters(t.meta, between("quantidade", 3, 9))
     assert(pruned.size < added.size, pruned.map(_.stats))
     // duplicate guard: re-registering the same directory refuses loudly
     // (Iceberg's check_duplicate_files) instead of silently doubling rows
