@@ -3,7 +3,7 @@ package graft.spark
 import graft.table.{GraftTable, RowAction}
 import org.apache.spark.sql.{Column, GraftSqlBridge, Row, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, Expression, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
@@ -18,6 +18,12 @@ import org.apache.spark.sql.functions.lit
   * intercepts the ANALYZED plans first and routes them to the tested CoW
   * `GraftTable.update` / `mergeInto` — the same structure Iceberg's
   * extensions used before the native rewrite existed.
+  *
+  * Both plan from the manifest first: UPDATE passes the conjuncts of
+  * its condition that have a DataSource `Filter` form to `planFilters`
+  * (dropping the rest only keeps more files), as SQL DELETE does; MERGE
+  * bounds the target files by the source's [min, max] on an equi-join
+  * key of ON (`GraftTable.mergeCandidates`). Only candidates are probed.
   *
   * Wire with `spark.sql.extensions=graft.spark.GraftExtensions`
   * (Verify/Bench/test sessions all do). */
@@ -74,7 +80,7 @@ object GraftRowLevelSql extends Rule[LogicalPlan] {
 case class GraftUpdateSqlCommand(
     table: GraftTable,
     assignments: Seq[Assignment],
-    condition: Option[Expression]) extends LeafRunnableCommand {
+    condition: Option[Expression]) extends LeafRunnableCommand with PredicateHelper {
 
   override def run(spark: SparkSession): Seq[Row] = {
     def unq(e: Expression): Column = GraftSqlBridge.column(e.transform {
@@ -93,7 +99,8 @@ case class GraftUpdateSqlCommand(
     val pred = condition.map(unq).getOrElse(lit(true))
     if (table.meta.allProperties.get("write.update.mode").contains("merge-on-read"))
       table.updateMoR(spark, pred, effective.toMap)
-    else table.update(spark, pred, effective.toMap)
+    else table.update(spark, pred, effective.toMap,
+      condition.toSeq.flatMap(splitConjunctivePredicates).flatMap(GraftSqlBridge.translateFilter))
     Seq.empty
   }
 }

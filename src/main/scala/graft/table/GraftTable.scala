@@ -539,9 +539,9 @@ final class GraftTable(val dir: HPath) {
     * NULL-marked the row as modified by its own commit). MoR deletes
     * (positional, vectors, equality) apply exactly like read(). Caveat
     * (documented, consistent with v3's equality-delete-upsert rule):
-    * MERGE and updateMoR write matched rows as NEW rows — those draw
-    * fresh ids; CoW delete/update and compaction are the id-preserving
-    * paths. */
+    * updateMoR and mergeMoR write changed rows as NEW rows — those draw
+    * fresh ids; CoW delete/update/merge (`copyOnWrite`) and compaction
+    * are the id-preserving paths. */
   def readWithLineage(spark: SparkSession): DataFrame = {
     val m = meta
     val snap = m.currentSnapshot
@@ -969,50 +969,66 @@ final class GraftTable(val dir: HPath) {
     keyed.collect { case (k, f) if keys.contains(k) => f }
   }
 
-  /** D2 row-level `DELETE WHERE` (README.md:231), copy-on-write: one scan
-    * finds the files that actually contain matching rows; only those are
-    * rewritten without the matching rows. Old snapshots keep the original
-    * files — the README.md:258 time-travel "magic" is structural. This
-    * whole-table probe is the reference the filter-planned overload below
-    * must agree with. */
-  def delete(spark: SparkSession, pred: Column): Unit = delete(spark, pred, Nil)
+  /** The entries of `files` holding some row of `rows`, named by its
+    * scan-reported `_graft_fp` column: the distinct paths are collected
+    * (metadata-sized: #files, not #rows) and mapped by matchAffected. */
+  private def filesOf(files: Seq[DataFile], rows: DataFrame): Seq[DataFile] =
+    matchAffected(files, rows.select(col("_graft_fp")).distinct()
+      .collect().map(_.getString(0)).toSet)
 
-  /** CoW delete with `pred`'s DataSource-`Filter` form (the SQL DELETE
-    * path pushes both; their conjunction must equal `pred`). Work is in
-    * proportion to the files the delete changes (`planDelete`): files
-    * `planFilters` rules out are never read, files whose manifest stats
-    * prove every row matches are dropped by metadata alone, and only the
-    * rest are probed and rewritten. A retention delete of whole days
-    * runs no Spark job at all. */
-  def delete(spark: SparkSession, pred: Column,
-      filters: Seq[org.apache.spark.sql.sources.Filter]): Unit = {
-    val (v, m) = TableMeta.load(dir)
-    val manifest = m.currentSnapshot.map(_.manifest).getOrElse(Nil)
-    if (manifest.isEmpty) return
-    val (dropped, probe) = planDelete(m, filters)
-    // readLive: earlier MoR-deleted rows must not resurrect in the rewrite
-    val affected =
-      if (probe.isEmpty) Nil
-      else matchAffected(probe, readLive(spark, m, m.currentSnapshot, probe).filter(pred)
-        .select(col("_graft_fp")).distinct()
-        .collect().map(_.getString(0)).toSet)
-    if (dropped.isEmpty && affected.isEmpty) return
-    // DELETE WHERE pred removes rows where pred IS TRUE; null-pred rows
-    // are kept — hence not(coalesce(pred, false)), not plain !pred.
-    // Survivors are UNMODIFIED rows merely relocated, so their lineage
-    // (row id AND last-updated seq) is materialized into the rewrite —
-    // v3's CoW obligation.
-    val newFiles =
+  /** The one copy-on-write rewrite behind DELETE, UPDATE and MERGE, on
+    * `m` as loaded at version `v`. `dropped` leave the manifest unread.
+    * `probe` sees only the live rows of `candidates` and returns the rows
+    * that change; their files are rewritten from their live rows with
+    * lineage, through `shape` (DELETE's filter, MERGE's join) and `value`
+    * per column. Every row keeps its row id; rows where `modified` holds
+    * write a NULL last-updated seq (read back as this commit's), the rest
+    * keep theirs. `inserts` (given the candidates' live rows) get a plain
+    * write of their own, so they draw fresh ids. One single-shot commit:
+    * a concurrent change must surface, not be silently reapplied. */
+  private def copyOnWrite(spark: SparkSession, op: String, v: Int, m: TableMeta,
+      dropped: Seq[DataFile], candidates: Seq[DataFile],
+      probe: Option[DataFrame => DataFrame], shape: DataFrame => DataFrame,
+      value: ColumnDef => Column, modified: Column,
+      inserts: DataFrame => Option[DataFrame] = _ => None): Unit = {
+    val snap = m.currentSnapshot
+    lazy val live = readLive(spark, m, snap, candidates)
+    val affected = probe match {
+      case Some(p) if candidates.nonEmpty => filesOf(candidates, p(live))
+      case _ => Nil
+    }
+    val rewritten =
       if (affected.isEmpty) Nil
-      else writeFiles(spark, m, readLive(spark, m, m.currentSnapshot, affected, lineage = true)
-        .filter(!coalesce(pred, lit(false)))
-        .select(m.currentSchema.map(c => col(c.name)) ++
-          Seq(col("_graft_row_id"), col("_graft_last_seq")): _*),
+      else writeFiles(spark, m, shape(readLive(spark, m, snap, affected, lineage = true))
+        .select(m.currentSchema.map(c => value(c).as(c.name)) ++ Seq(col("_graft_row_id"),
+          when(modified, lit(null).cast(LongType)).otherwise(col("_graft_last_seq"))
+            .as("_graft_last_seq")): _*),
         lineageMaterialized = true)
-    val newManifest = manifest.diff(dropped ++ affected) ++ newFiles
-    // single-shot commit: a CoW delete validated against THIS manifest —
-    // a concurrent change must surface, not be silently reapplied
-    TableMeta.commit(dir, v, appendSnapshot(m, "delete", newManifest, carryDeletes(m)))
+    val added = inserts(live).fold(Seq.empty[DataFile])(writeFiles(spark, m, _))
+    if (dropped.isEmpty && affected.isEmpty && added.isEmpty) return
+    TableMeta.commit(dir, v, appendSnapshot(m, op,
+      snap.map(_.manifest).getOrElse(Nil).diff(dropped ++ affected) ++ rewritten ++ added,
+      carryDeletes(m)))
+  }
+
+  /** D2 row-level `DELETE WHERE` (README.md:231), copy-on-write: only
+    * files holding matching rows are rewritten; old snapshots keep the
+    * originals (README.md:258). `filters` are `pred`'s DataSource-`Filter`
+    * form (SQL DELETE pushes both). Work is then in proportion to the
+    * files the delete changes (`planDelete`): files `planFilters` rules
+    * out are never read, files whose stats prove every row matches are
+    * dropped by metadata alone (a retention delete runs no Spark job), and
+    * only the rest are probed. No filters: every file is probed, the
+    * whole-table reference. */
+  def delete(spark: SparkSession, pred: Column,
+      filters: Seq[org.apache.spark.sql.sources.Filter] = Nil): Unit = {
+    val (v, m) = TableMeta.load(dir)
+    val (dropped, candidates) = planDelete(m, filters)
+    // DELETE WHERE pred removes rows where pred IS TRUE; null-pred rows
+    // are kept — hence not(coalesce(pred, false)), not plain !pred
+    copyOnWrite(spark, "delete", v, m, dropped, candidates,
+      probe = Some(_.filter(pred)), shape = _.filter(!coalesce(pred, lit(false))),
+      value = c => col(c.name), modified = lit(false))
   }
 
   /** DELETE planning over pushed filters: (files dropped whole by
@@ -1234,38 +1250,22 @@ final class GraftTable(val dir: HPath) {
 
   /** Row-level `UPDATE ... SET ... WHERE` — the other half of the v2
     * "updates e deletes" promise (README.md:180), copy-on-write like
-    * delete: one scan finds the files containing matching rows, only
-    * those are rewritten with the assignments applied where the
-    * predicate holds. Old snapshots keep the pre-update files. */
-  def update(spark: SparkSession, pred: Column, assignments: Map[String, Column]): Unit = {
+    * delete: the `planFilters` candidates for `filters` (any conjuncts
+    * of `pred` in DataSource-`Filter` form; none = every file) are
+    * probed, and files holding matching rows are rewritten with the
+    * assignments applied where `pred` holds. */
+  def update(spark: SparkSession, pred: Column, assignments: Map[String, Column],
+      filters: Seq[org.apache.spark.sql.sources.Filter] = Nil): Unit = {
     val (v, m) = TableMeta.load(dir)
     assignments.keys.foreach(k =>
       require(m.currentSchema.exists(_.name == k), s"no column $k"))
-    val manifest = m.currentSnapshot.map(_.manifest).getOrElse(Nil)
-    if (manifest.isEmpty) return
-    val affectedPaths = readLive(spark, m, m.currentSnapshot, manifest).filter(pred)
-      .select(col("_graft_fp")).distinct()
-      .collect().map(_.getString(0)).toSet
-    val affected = matchAffected(manifest, affectedPaths)
-    if (affected.isEmpty) return
     // null-pred rows are NOT updated (same rule as delete's keep side)
     val hit = coalesce(pred, lit(false))
-    // lineage: row ids survive the update (same logical row); hit rows
-    // write last_seq NULL — "modified by this very commit" — which the
-    // read side coalesces to the new file's seq (the v3 convention:
-    // the writer can't know the commit's seq before the commit)
-    val live = readLive(spark, m, m.currentSnapshot, affected, lineage = true)
-    val rewritten = live.select(m.currentSchema.map { c =>
-      assignments.get(c.name) match {
-        case Some(e) => when(hit, e.cast(c.sparkType)).otherwise(col(c.name)).as(c.name)
-        case None    => col(c.name)
-      }
-    } ++ Seq(col("_graft_row_id"),
-      when(hit, lit(null).cast(LongType))
-        .otherwise(col("_graft_last_seq")).as("_graft_last_seq")): _*)
-    val newFiles = writeFiles(spark, m, rewritten, lineageMaterialized = true)
-    TableMeta.commit(dir, v,
-      appendSnapshot(m, "update", manifest.diff(affected) ++ newFiles, carryDeletes(m)))
+    copyOnWrite(spark, "update", v, m, Nil, planFilters(m, filters),
+      probe = Some(_.filter(hit)), shape = identity,
+      value = c => assignments.get(c.name)
+        .fold(col(c.name))(e => when(hit, e.cast(c.sparkType)).otherwise(col(c.name))),
+      modified = hit)
   }
 
   /** Merge-on-read UPDATE (`write.update.mode=merge-on-read`): ONE
@@ -1338,84 +1338,43 @@ final class GraftTable(val dir: HPath) {
   /** MERGE-shaped upsert: rows of `source` whose `keyCol` matches an
     * existing row REPLACE it (update-all-columns), the rest are inserted —
     * `MERGE INTO t USING s ON t.k = s.k WHEN MATCHED THEN UPDATE SET *
-    * WHEN NOT MATCHED THEN INSERT *`. Copy-on-write on the files that
-    * contain matched keys only; files without matches are untouched.
-    * Scale shape: the key probe is a semi/anti join on the key column
-    * (broadcast when the source is small, shuffle otherwise — AQE's
-    * call), never a row-at-a-time lookup. */
+    * WHEN NOT MATCHED THEN INSERT *`, run by `mergeInto` (so a target row
+    * matched by two source rows raises the cardinality violation). The
+    * source is cast to the table's types first, so the key sides share a
+    * type and the source's key range plans the candidate files. */
   def merge(spark: SparkSession, source: DataFrame, keyCol: String): Unit = {
-    val (v, m) = TableMeta.load(dir)
-    require(m.currentSchema.exists(_.name == keyCol), s"no column $keyCol")
-    val aligned = source.select(
-      m.currentSchema.map(c => col(c.name).cast(c.sparkType).as(c.name)): _*)
-    val manifest = m.currentSnapshot.map(_.manifest).getOrElse(Nil)
-    if (manifest.isEmpty) {
-      val newFiles = writeFiles(spark, m, aligned)
-      TableMeta.commit(dir, v, appendSnapshot(m, "merge", newFiles, Nil))
-      return
-    }
-    val keys = aligned.select(col(keyCol)).distinct()
-    val affectedPaths = readLive(spark, m, m.currentSnapshot, manifest)
-      .join(keys, Seq(keyCol), "left_semi")
-      .select(col("_graft_fp")).distinct()
-      .collect().map(_.getString(0)).toSet
-    val affected = matchAffected(manifest, affectedPaths)
-    // affected files: keep only unmatched rows; matched rows come back
-    // (updated) from `aligned`, which also carries the pure inserts
-    val kept = readLive(spark, m, m.currentSnapshot, affected)
-      .join(keys, Seq(keyCol), "left_anti")
-      .select(m.currentSchema.map(c => col(c.name)): _*)
-    val newFiles = writeFiles(spark, m, kept.unionByName(aligned))
-    TableMeta.commit(dir, v,
-      appendSnapshot(m, "merge", manifest.diff(affected) ++ newFiles, carryDeletes(m)))
+    val schema = meta.currentSchema
+    require(schema.exists(_.name == keyCol), s"no column $keyCol")
+    val all = RowAction(None, delete = false,
+      schema.map(c => c.name -> col(s"__graft_s.`${c.name}`")))
+    mergeInto(spark, source.select(schema.map(c => col(c.name).cast(c.sparkType).as(c.name)): _*),
+      col(s"__graft_t.`$keyCol`") === col(s"__graft_s.`$keyCol`"), Seq(all), Seq(all), Nil)
   }
 
   /** General `MERGE INTO` with full SQL clause semantics: ordered WHEN
     * clauses, FIRST applicable action wins per row; matched /
-    * not-matched-by-source actions rewrite (CoW) only the files that
-    * contain affected rows — ALL files when notMatchedBySource is present
-    * (any unmatched target row may change); WHEN NOT MATCHED inserts are
-    * appended in the same commit. Raises on the SQL/Iceberg cardinality
-    * rule (one target row matching >1 source row would make both the
-    * update value and the join fan-out ambiguous).
-    *
-    * Scale shape: one probe join finds affected files AND checks
-    * cardinality (group by row id = parquet file/position metadata — no
-    * synthetic ids); the rewrite joins only affected-file rows against
-    * the source (broadcast when small, shuffle otherwise — AQE's call);
-    * action dispatch is a single codegen'd CASE chain, never a per-action
-    * pass. Condition/assignment Columns use the `__graft_t` / `__graft_s`
-    * qualifiers (see RowAction). */
+    * not-matched-by-source actions rewrite (`copyOnWrite`) only the files
+    * holding affected rows, inserts land in the same commit. Raises on
+    * the SQL/Iceberg cardinality rule (one target row matching >1 source
+    * row would make both the update value and the join fan-out
+    * ambiguous). Candidates: `mergeCandidates`, or every file with WHEN
+    * NOT MATCHED BY SOURCE (any unmatched target row may change). One
+    * probe join over them finds the affected files AND checks
+    * cardinality (group by parquet file/position — no synthetic ids);
+    * the rewrite joins only affected-file rows against the source, the
+    * insert anti-join only the candidates'; action dispatch is a single
+    * codegen'd CASE chain. Condition/assignment Columns use the
+    * `__graft_t` / `__graft_s` qualifiers (see RowAction). */
   def mergeInto(spark: SparkSession, source: DataFrame, cond: Column,
       matched: Seq[RowAction], notMatched: Seq[RowAction],
       notMatchedBySource: Seq[RowAction]): Unit = {
     val (v, m) = TableMeta.load(dir)
-    val manifest = m.currentSnapshot.map(_.manifest).getOrElse(Nil)
-    val schemaCols = m.currentSchema
     // marker column: left-outer rows with no source match have it NULL —
     // source columns alone can't tell (an all-NULL source row is legal)
     val srcMarked = source.withColumn("__graft_m", lit(true)).alias("__graft_s")
-
-    // one probe pass: which files hold matched rows + cardinality check
-    val (affected, dupMatched) =
-      if (manifest.isEmpty || (matched.isEmpty && notMatchedBySource.isEmpty))
-        (Seq.empty[DataFile], false)
-      else {
-        val probe = readLive(spark, m, m.currentSnapshot, manifest).alias("__graft_t")
-          .join(srcMarked, cond, "inner")
-          .groupBy(col("_graft_fp"), col("_graft_pos"))
-          .agg(count(lit(1)).as("__graft_n"))
-          .groupBy(col("_graft_fp"))
-          .agg(max(col("__graft_n")).as("__graft_mx"))
-          .collect() // O(affected files) rows — metadata-sized
-        val paths = probe.map(_.getString(0)).toSet
-        val aff =
-          if (notMatchedBySource.nonEmpty) manifest
-          else matchAffected(manifest, paths)
-        (aff, probe.exists(_.getLong(1) > 1L))
-      }
-    if (dupMatched) throw new IllegalStateException(
-      "MERGE cardinality violation: a target row matches more than one source row")
+    val candidates =
+      if (notMatchedBySource.nonEmpty) m.currentSnapshot.map(_.manifest).getOrElse(Nil)
+      else mergeCandidates(spark, m, srcMarked, cond)
 
     // first-applicable-action dispatch: 1..n = matched clauses (row DID
     // match), n+1.. = not-matched-by-source clauses (row did NOT match),
@@ -1437,55 +1396,72 @@ final class GraftTable(val dir: HPath) {
             case None => acc
           }
         case (acc, _) => acc
-      }.map(_.otherwise(base)).getOrElse(base).as(c.name)
+      }.map(_.otherwise(base)).getOrElse(base)
 
-    val rewritten: Option[DataFrame] =
-      if (affected.isEmpty) None
-      else {
-        val isM = col("__graft_m").isNotNull
-        val act = firstApplicable(
-          matched.zipWithIndex.map { case (a, i) =>
-            (isM && a.condition.getOrElse(lit(true)), i + 1) } ++
-          notMatchedBySource.zipWithIndex.map { case (a, i) =>
-            (!isM && a.condition.getOrElse(lit(true)), matched.size + i + 1) })
-        val j = readLive(spark, m, m.currentSnapshot, affected).alias("__graft_t")
-          .join(srcMarked, cond, "left_outer")
+    val isM = col("__graft_m").isNotNull
+    val act = firstApplicable(
+      matched.zipWithIndex.map { case (a, i) =>
+        (isM && a.condition.getOrElse(lit(true)), i + 1) } ++
+      notMatchedBySource.zipWithIndex.map { case (a, i) =>
+        (!isM && a.condition.getOrElse(lit(true)), matched.size + i + 1) })
+    val deleteIdxs = allActs.collect { case (a, i) if a.delete => i + 1 }
+    copyOnWrite(spark, "merge", v, m, Nil, candidates,
+      // source rows per target row (0 = unmatched: kept only with WHEN
+      // NOT MATCHED BY SOURCE, where every file with a live row changes)
+      probe = if (matched.isEmpty && notMatchedBySource.isEmpty) None else Some(live =>
+        live.alias("__graft_t")
+          .join(srcMarked, cond, if (notMatchedBySource.isEmpty) "inner" else "left_outer")
+          .groupBy(col("_graft_fp"), col("_graft_pos"))
+          .agg(count(col("__graft_m")).as("__graft_n"))
+          .filter(when(col("__graft_n") > 1, raise_error(lit(
+            "MERGE cardinality violation: a target row matches more than one source row")))
+            .otherwise(lit(true)))),
+      shape = { live =>
+        val j = live.alias("__graft_t").join(srcMarked, cond, "left_outer")
           .withColumn("__graft_act", act)
-        val deleteIdxs = allActs.collect { case (a, i) if a.delete => i + 1 }
-        val kept =
-          if (deleteIdxs.isEmpty) j
-          else j.filter(!col("__graft_act").isin(deleteIdxs: _*))
-        Some(kept.select(schemaCols.map(c =>
-          assignChain(allActs, c, col(s"__graft_t.${c.name}"))): _*))
-      }
+        if (deleteIdxs.isEmpty) j else j.filter(!col("__graft_act").isin(deleteIdxs: _*))
+      },
+      value = c => assignChain(allActs, c, col(s"__graft_t.`${c.name}`")),
+      modified = col("__graft_act") > 0,
+      inserts = live =>
+        if (notMatched.isEmpty) None
+        else {
+          val ins = firstApplicable(notMatched.zipWithIndex.map { case (a, i) =>
+            (a.condition.getOrElse(lit(true)), i + 1) })
+          Some(source.alias("__graft_s").join(live.alias("__graft_t"), cond, "left_anti")
+            .withColumn("__graft_act", ins).filter(col("__graft_act") > 0)
+            .select(m.currentSchema.map(c =>
+              assignChain(notMatched.zipWithIndex, c, lit(null).cast(c.sparkType)).as(c.name)): _*))
+        })
+  }
 
-    val inserts: Option[DataFrame] =
-      if (notMatched.isEmpty) None
-      else {
-        val srcOnly =
-          if (manifest.isEmpty) source.alias("__graft_s")
-          else source.alias("__graft_s")
-            .join(readLive(spark, m, m.currentSnapshot, manifest).alias("__graft_t"),
-              cond, "left_anti")
-        val act = firstApplicable(notMatched.zipWithIndex.map { case (a, i) =>
-          (a.condition.getOrElse(lit(true)), i + 1) })
-        val filtered = srcOnly.withColumn("__graft_act", act)
-          .filter(col("__graft_act") > 0)
-        Some(filtered.select(schemaCols.map(c =>
-          assignChain(notMatched.zipWithIndex, c, lit(null).cast(c.sparkType))): _*))
+  /** MERGE candidates: for a conjunct `__graft_t.k = __graft_s.k2` of
+    * `cond` over one non-floating type, the files `planFilters` keeps for
+    * k in the source's [min(k2), max(k2)] (one aggregate), none when
+    * every k2 is NULL; else every file. A matching target row has k = k2
+    * for a non-NULL k2, so no match is missed. */
+  private def mergeCandidates(spark: SparkSession, m: TableMeta,
+      srcMarked: DataFrame, cond: Column): Seq[DataFile] = {
+    import org.apache.spark.sql.GraftSqlBridge
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
+    import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
+    // resolve `cond` against an empty target frame: the analyzer inserts a
+    // Cast wherever the key types differ, so a bare attribute pair has one
+    val key = readFiles(spark, m, Nil).alias("__graft_t").join(srcMarked, cond)
+      .queryExecution.analyzed match {
+        case ExtractEquiJoinKeys(_, tKeys, sKeys, _, _, _, source, _) =>
+          tKeys.zip(sKeys).collectFirst {
+            case (a: AttributeReference, b: AttributeReference) if a.dataType == b.dataType &&
+                a.dataType != FloatType && a.dataType != DoubleType => (a.name, source, b)
+          }
+        case _ => None
       }
-
-    (rewritten, inserts) match {
-      case (None, None) => // no clause can touch anything — no commit
-      case (rw, ins) =>
-        val out = (rw, ins) match {
-          case (Some(a), Some(b)) => a.unionByName(b)
-          case (a, b)             => a.orElse(b).get
-        }
-        val newFiles = writeFiles(spark, m, out)
-        if (affected.isEmpty && newFiles.isEmpty) () // zero inserts survived
-        else TableMeta.commit(dir, v,
-          appendSnapshot(m, "merge", manifest.diff(affected) ++ newFiles, carryDeletes(m)))
+    key.fold(planFilters(m, Nil)) { case (name, source, k2) =>
+      val k = GraftSqlBridge.column(k2)
+      val r = GraftSqlBridge.ofRows(spark, source).agg(min(k), max(k)).head()
+      if (r.isNullAt(0)) Nil
+      else planFilters(m, Seq(GreaterThanOrEqual(name, r.get(0)), LessThanOrEqual(name, r.get(1))))
     }
   }
 
@@ -1842,13 +1818,9 @@ final class GraftTable(val dir: HPath) {
           val entries = spark.read
             .parquet(newDeleteFiles.map(f => dir.resolve(f.path).toString): _*)
             .select(col("file_path").as("_graft_fp"), col("pos").as("_graft_pos"))
-          // scan only the AFFECTED base files: the distinct file paths in
-          // the new delete entries are metadata-sized (#files, not #rows)
-          val affectedAbs = entries.select(col("_graft_fp")).distinct()
-            .collect().map(_.getString(0)).toSet
-          val affected = matchAffected(s.manifest, affectedAbs)
+          // scan only the AFFECTED base files
           Some(tag(
-            readFiles(spark, m, affected, withPos = true)
+            readFiles(spark, m, filesOf(s.manifest, entries), withPos = true)
               .join(entries, Seq("_graft_fp", "_graft_pos"), "left_semi")
               .drop("_graft_fp", "_graft_pos"),
             "delete", s.snapshotId))

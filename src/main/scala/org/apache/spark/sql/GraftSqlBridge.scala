@@ -9,6 +9,11 @@ object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** A Catalyst predicate as the DataSource `Filter` DSv2 pushdown would
+    * hand a source, or None when it has no `Filter` form. */
+  def translateFilter(e: Expression): Option[org.apache.spark.sql.sources.Filter] =
+    execution.datasources.DataSourceStrategy.translateFilter(e, supportNestedPredicatePushdown = false)
+
   /** The registered catalog plugin under `name`, if any — CatalogManager
     * accessors are `private[sql]`, hence bridged. */
   def catalogPlugin(

@@ -23,6 +23,14 @@ class OneReadPathSpec extends AnyFunSuite {
     assert(hits == Seq("graft/table/GraftTable.scala" -> 1))
   }
 
+  test("DELETE, UPDATE and MERGE share one copy-on-write rewrite") {
+    val text = Files.readString(table.resolve("GraftTable.scala"))
+    // the definition plus its one call site
+    assert("matchAffected\\(".r.findAllIn(text).size == 2)
+    val merge = text.substring(text.indexOf("def merge("), text.indexOf("def mergeInto("))
+    assert(!merge.contains("readLive("))
+  }
+
   test("GraftTable defines no special-case planner") {
     val text = Files.readString(table.resolve("GraftTable.scala"))
     Seq("planDayRange", "readDayRange", "planColRange", "readColRange")

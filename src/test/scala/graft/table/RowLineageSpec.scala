@@ -73,6 +73,27 @@ class RowLineageSpec extends SparkTestBase {
     assert(lineage(t) === afterUpd)
   }
 
+  test("SQL CoW MERGE: untouched rows keep lineage, updated rows their id, inserts draw fresh ids") {
+    val (cat, t) = mkTable("t8")
+    t.append(rows(0 until 10, "a")) // one file
+    val before = lineage(t)
+    val c = "lineage_merge_sql"
+    spark.conf.set(s"spark.sql.catalog.$c", classOf[graft.spark.GraftCatalogPlugin].getName)
+    spark.conf.set(s"spark.sql.catalog.$c.warehouse", cat.warehouse.toString)
+    import spark.implicits._
+    Seq((3L, "upd"), (100L, "new")).toDF("k", "v").createOrReplaceTempView("lineage_merge_src")
+    spark.sql(s"""MERGE INTO $c.db.t8 t USING lineage_merge_src s ON t.k = s.k
+        WHEN MATCHED THEN UPDATE SET v = s.v WHEN NOT MATCHED THEN INSERT *""")
+    val seq = t.meta.currentSnapshotId.get
+    val after = lineage(t)
+    assert(after.keySet === (0L until 10L).toSet + 100L)
+    (0L until 10L).foreach { k =>
+      assert(after(k)._1 === before(k)._1, s"merge moved id of row $k")
+      assert(after(k)._2 === (if (k == 3L) seq else before(k)._2), s"row $k last_seq wrong")
+    }
+    assert(after(100L) === (10L, seq), "an insert draws the next fresh id")
+  }
+
   test("ids are never reused: append after delete continues the counter") {
     val (_, t) = mkTable("t4")
     t.append(rows(0 until 10, "a"))

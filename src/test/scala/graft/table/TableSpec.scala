@@ -322,6 +322,19 @@ class TableSpec extends SparkTestBase {
     assert(t.readVersion(spark, 1).filter(col("id_pedido") === "p9").count() === 0)
   }
 
+  test("MERGE upsert raises when two source rows match one target row") {
+    val cat = newCatalog()
+    cat.createSchema("db")
+    val t = cat.createTable("db.mrgdup", pedidosSchema)
+    t.append(pedidosDf) // snapshot 1
+    val p1 = pedidosDf.filter(col("id_pedido") === "p1")
+    val e = intercept[Exception](t.merge(spark, p1.unionByName(p1), "id_pedido"))
+    def causes(x: Throwable): Seq[Throwable] = if (x == null) Nil else x +: causes(x.getCause)
+    assert(causes(e).exists(x => Option(x.getMessage).exists(_.contains("MERGE cardinality violation"))))
+    assert(t.meta.snapshots.size === 1)
+    assert(t.read(spark).count() === 5)
+  }
+
   test("MERGE into an empty table is a plain insert") {
     val cat = newCatalog()
     cat.createSchema("db")
