@@ -14,7 +14,7 @@ object Bench {
     // first-read cost isn't attributed to whichever query runs first
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
+      try Tables(spark, sfDir, t).count()
       catch { case _: Throwable => () }
     }
     try Tables.events(spark, sfDir).count() catch { case _: Throwable => () }

@@ -1,17 +1,73 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.GraftSparkBridge
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 
-/** Readers for the driver-generated test tables (TESTDATA.md).
+import graft.table.GraftIO
+
+/** Readers for the driver-generated test tables (TESTDATA.md) and for
+  * the parquet artifacts query code writes itself (Scratch).
   *
-  * Every `SparkEntry.queries` entry reads its inputs through here so the
-  * scan path is uniform: plain parquet, letting Catalyst push filters and
-  * prune columns into the vectorized reader. At cluster scale the same
-  * call works unchanged against an object-store URI.
+  * Every `SparkEntry.queries` entry reads parquet through `parquet`, so
+  * the scan path is uniform: plain parquet, letting Catalyst push filters
+  * and prune columns into the vectorized reader. At cluster scale the
+  * same call works unchanged against an object-store URI.
   */
 object Tables {
+
+  /** `spark.read.parquet(path)` without its schema-inference job. Spark
+    * infers a parquet schema through `mergeSchemasInParallel`, which runs
+    * a one-task `parallelize(...).collect()` job on every read, even
+    * though without `mergeSchema` it reads one footer: the summary file
+    * or the first data file in path order. This reads that same footer
+    * on the driver, converts it with Spark's own `readSchema` and passes
+    * the result as the read's schema, so building the DataFrame starts
+    * no job. A path with no footer to read (missing, empty) goes to
+    * Spark unchanged, to fail with Spark's own error. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    footerFile(new Path(path))
+      .flatMap(f => GraftSqlBridge.parquetSchema(spark, footer(f)))
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+
+  /** The footer Spark's non-merging inference reads: the file itself, or
+    * under a directory `_common_metadata`, else `_metadata`, else the
+    * first data file by path, over the leaves Spark's file index lists. */
+  private def footerFile(p: Path): Option[FileStatus] = {
+    val fs = GraftIO.fs(p)
+    def leaves(d: Path): Seq[FileStatus] =
+      fs.listStatus(d).toSeq
+        .filterNot(st => GraftSparkBridge.hiddenFromListing(st.getPath.getName))
+        .flatMap(st => if (st.isDirectory) leaves(st.getPath) else Seq(st))
+    try {
+      val st = fs.getFileStatus(p)
+      if (!st.isDirectory) Some(st)
+      else {
+        val files = leaves(p).sortBy(_.getPath.toString)
+        val summaries = Seq("_common_metadata", "_metadata")
+        summaries.iterator.flatMap(n => files.find(_.getPath.getName == n)).nextOption()
+          .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+      }
+    } catch { case _: java.io.FileNotFoundException => None }
+  }
+
+  /** One footer without its row groups, opened like `FooterStats`: read
+    * options over the shared Hadoop conf. */
+  private def footer(file: FileStatus): Footer = {
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromStatus(file, GraftIO.conf),
+      HadoopReadOptions.builder(GraftIO.conf)
+        .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+    try new Footer(file.getPath, reader.getFooter)
+    finally reader.close()
+  }
+
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = apply(s, d, "nation")

@@ -144,43 +144,12 @@ object Events {
       .orderBy(col("event_id"))
   }
 
-  /** J1 as an ACTUAL Structured Streaming run, not a batch dual: the
-    * events parquet plays a file-source stream (Trigger.AvailableNow
-    * drains it and terminates), the SAME windowed aggregation as the
-    * batch `tumbling` runs over it with a watermark, and the memory sink
-    * collects complete-mode results. Deterministic, so it shares the
-    * batch query's oracle — proving stream/batch unification, not just
-    * claiming it. At scale the only change is the trigger (continuous
-    * micro-batches) and a real sink. */
-  // cache the physical events schema so each of the 7 judged stream
-  // queries (×2 bench runs) doesn't re-read the footer (~100 ms each —
-  // pure drain floor). Keyed by (path, size, mtime) from a Hadoop
-  // FileStatus (works for URI-form and non-local paths, unlike
-  // java.io.File): a REGENERATED events.parquet in the same JVM (the
-  // dtype-drift class EventsDtypeSpec guards) invalidates naturally, at
-  // the cost of one stat per call instead of a footer read. If the stat
-  // itself fails, skip the cache rather than serve under a stale key.
-  // Known residual window: a same-length regeneration inside one mtime
-  // granule is indistinguishable by stat — acceptable for a cache whose
-  // alternative is re-reading the footer every call; the driver
-  // regenerates between sessions, never mid-JVM.
-  private val eventSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long),
-      org.apache.spark.sql.types.StructType]()
-
   private def eventStream(s: SparkSession, d: String): DataFrame = {
     // same ns/µs dtype branching as the batch reader (Tables.events), but
     // the schema must be declared up-front (streaming file sources never
     // infer), so branch on the batch-loaded physical schema
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    def readSchema() = s.read.parquet(s"$d/events.parquet").schema
-    val rawSchema =
-      try {
-        val hp = new org.apache.hadoop.fs.Path(s"$d/events.parquet")
-        val st = graft.table.GraftIO.fs(hp).getFileStatus(hp)
-        eventSchemaCache.computeIfAbsent(
-          (d, st.getLen, st.getModificationTime), _ => readSchema())
-      } catch { case scala.util.control.NonFatal(_) => readSchema() }
+    val rawSchema = Tables.parquet(s, s"$d/events.parquet").schema
     // file-source streams take a DIRECTORY; glob-filter to the events file
     val raw = s.readStream.schema(rawSchema)
       .option("pathGlobFilter", "events.parquet").parquet(d)
@@ -225,6 +194,14 @@ object Events {
     s.table(qname)
   }
 
+  /** J1 as an ACTUAL Structured Streaming run, not a batch dual: the
+    * events parquet plays a file-source stream (Trigger.AvailableNow
+    * drains it and terminates), the SAME windowed aggregation as the
+    * batch `tumbling` runs over it with a watermark, and the memory sink
+    * collects complete-mode results. Deterministic, so it shares the
+    * batch query's oracle — proving stream/batch unification, not just
+    * claiming it. At scale the only change is the trigger (continuous
+    * micro-batches) and a real sink. */
   def streamTumbling(s: SparkSession, d: String): DataFrame =
     drainToMemory(s, "graft_stream_tumbling", "complete")(
       graft.streaming.EventStreams.tumblingCounts(eventStream(s, d)))
@@ -396,7 +373,7 @@ object Events {
       writeOne(late.toDF("event_id", "event_type", "ts"), "b", t0 + 120000L)
     }
     val src = s.readStream
-      .schema(s.read.parquet(replayDir).schema)
+      .schema(Tables.parquet(s, replayDir).schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(replayDir)
     val accepted = drainToMemory(s, "graft_stream_late", "append")(

@@ -113,7 +113,7 @@ object Graphs {
         .distinct()
         .write.mode("overwrite").parquet(pth)
     }
-    s.read.parquet(tmp)
+    Tables.parquet(s, tmp)
   }
 
   /** Directed co-purchase edges (src, dst, outdeg), both directions
@@ -136,7 +136,7 @@ object Graphs {
       edges.withColumn("outdeg", count(lit(1)).over(w))
         .write.mode("overwrite").parquet(pth)
     }
-    s.read.parquet(tmp)
+    Tables.parquet(s, tmp)
   }
 
   /** Synchronous PageRank over directed (src, dst) edges in exact BIGINT
@@ -727,7 +727,7 @@ object Graphs {
         .select(col("src"), col("dst"), expr("1000000L div cooc").as("w"))
         .write.mode("overwrite").parquet(pth)
     }
-    s.read.parquet(tmp)
+    Tables.parquet(s, tmp)
   }
 
   /** q_sssp: rarity-weighted shortest distance from the smallest part id
@@ -788,7 +788,7 @@ object Graphs {
         .distinct()
         .write.mode("overwrite").parquet(pth)
     }
-    s.read.parquet(tmp)
+    Tables.parquet(s, tmp)
   }
 
   /** HITS hubs & authorities (Kleinberg 1999) on the customer→part

@@ -615,7 +615,7 @@ object Joins {
         .select(col("l_orderkey").as("lt_okey"), col("l_suppkey").as("lt_skey"))
         .write.mode("overwrite").parquet(pth)
     }
-    val late = s.read.parquet(latePath)
+    val late = Tables.parquet(s, latePath)
     val others = Tables.lineitem(s, d)
       .select(col("l_orderkey").as("oth_okey"), col("l_suppkey").as("oth_skey"))
     val lateOthers = late.select(col("lt_okey").as("lo_okey"), col("lt_skey").as("lo_skey"))

@@ -1140,7 +1140,7 @@ object TableQueries {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    s.read.parquet(out)
+    Tables.parquet(s, out)
   }
 
   def streamTableRead(s: SparkSession, d: String): DataFrame = {

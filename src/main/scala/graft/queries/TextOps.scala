@@ -241,7 +241,7 @@ object TextOps {
         .select(col("doc_id"), split(col("text"), " ").as("t"))
         .select(col("doc_id"), array_sort(array_distinct(shinglesOf(col("t")))).as("sh"))
         .write.mode("overwrite").parquet(pth))
-    val base = s.read.parquet(tmp)
+    val base = Tables.parquet(s, tmp)
     // Prefix under the ARRAY'S OWN sort order. The prefix principle
     // holds for ANY fixed global token order, so the stored order is
     // free: prefix extraction is a row-side slice — no df table, no
@@ -333,7 +333,7 @@ object TextOps {
         .select(col("doc_id"), split(col("text"), " ").as("t"))
         .select(col("doc_id"), array_distinct(shinglesOf(col("t"))).as("sh"))
         .write.mode("overwrite").parquet(pth))
-    val base = s.read.parquet(tmp)
+    val base = Tables.parquet(s, tmp)
     // set sizes straight from the array — no second explode+groupBy pass
     val sizes = base.select(col("doc_id"), size(col("sh")).as("sz"))
     // posting-frequency cap via a window on the join key: the hash
@@ -416,7 +416,7 @@ object TextOps {
         .agg(sort_array(collect_list(col("key"))).as("shc"))
         .write.mode("overwrite").parquet(pth)
     }
-    val basec = s.read.parquet(tmp)
+    val basec = Tables.parquet(s, tmp)
     val TAU = 0.5
     // prefix length from the CAPPED size is a safe (longer) bound: a
     // qualifying pair has common ≥ τ·sz_full ≥ τ·sz_capped
@@ -1477,7 +1477,7 @@ object TextOps {
       ccPointerDoubling(tokenSetsArtifact(s, d).select(col("doc_id")), edges)
         .write.mode("overwrite").parquet(pth)
     }
-    s.read.parquet(tmp).orderBy(col("doc_id"))
+    Tables.parquet(s, tmp).orderBy(col("doc_id"))
   }
 
   /** J6 TRAIN/TEST SPLIT LEAKAGE audit — the evaluation-integrity check
@@ -2545,7 +2545,7 @@ object TextOps {
         .write.mode("overwrite").parquet(pth + "/merges")
       state.write.mode("overwrite").parquet(pth + "/state")
     }
-    (s.read.parquet(root + "/merges"), s.read.parquet(root + "/state"))
+    (Tables.parquet(s, root + "/merges"), Tables.parquet(s, root + "/state"))
   }
 
   def bpeTrain(s: SparkSession, d: String): DataFrame =

@@ -154,7 +154,7 @@ object Vectors {
       // here could throw "Recursive update" or silently unlink the
       // inner entry
       val cells = bandCellsPath(s, d)
-      s.read.parquet(graft.Scratch.materializedOnce("banded_pairs_t" + tables, d) {
+      Tables.parquet(s, graft.Scratch.materializedOnce("banded_pairs_t" + tables, d) {
         p => buildBandedPairsFrom(s, d, cells, tables).write.mode("overwrite").parquet(p)
       })
     } else buildBandedPairs(s, d, tables)
@@ -164,7 +164,7 @@ object Vectors {
 
   private def buildBandedPairsFrom(
       s: SparkSession, d: String, cellsPath: String, tables: Int): DataFrame = {
-    val cells = s.read.parquet(cellsPath).filter(col("t") < tables)
+    val cells = Tables.parquet(s, cellsPath).filter(col("t") < tables)
     val cand = cells.select(col("vec_id").as("ia"), col("t"), col("b"))
       .join(cells.select(col("vec_id").as("ib"), col("t"), col("b")), Seq("t", "b"))
       .filter(col("ia") < col("ib"))
@@ -437,7 +437,7 @@ object Vectors {
     // cells come from the SHARED band-cell artifact (bandCellsPath),
     // not a per-query re-hash of the corpus — annLsh uses its first 3
     // tables (planes 0–11; the seeded sequence draws planes in order)
-    val cells = s.read.parquet(bandCellsPath(s, d)).filter(col("t") < 3)
+    val cells = Tables.parquet(s, bandCellsPath(s, d)).filter(col("t") < 3)
     val q = e.filter(col("vec_id") === 0)
       .select(col("embedding").as("q_embedding"),
         norm2(col("embedding")).as("q_norm"))
@@ -687,7 +687,7 @@ object Vectors {
       element_at(lut(m)(sumSq), col(s"code_$m") + 1) // same fold the oracle's c2 literal splices
     }
     val adc = dotTerms.reduce(_ + _) / (lit(qn) * sqrt(n2Terms.reduce(_ + _)))
-    val candidates = s.read.parquet(path)
+    val candidates = Tables.parquet(s, path)
       .filter(col("vec_id") =!= 0)
       .select(col("vec_id"), adc.as("adc"))
       .orderBy(col("adc").desc, col("vec_id"))
@@ -1561,7 +1561,7 @@ object Vectors {
       dbscanEpsPairs(s, dbscanQuantized(s, d))
         .write.mode("overwrite").parquet(pth)
     }
-    val und = s.read.parquet(undPath)
+    val und = Tables.parquet(s, undPath)
     val edges = und.select(col("ia").as("src"), col("ib").as("dst"))
       .unionAll(und.select(col("ib").as("src"), col("ia").as("dst")))
     val nn = edges.groupBy(col("src").as("vec_id")).agg(count(lit(1)).as("n"))

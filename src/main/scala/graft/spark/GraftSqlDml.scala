@@ -42,6 +42,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // V1Scan bridge hides scan stats from post-pushdown join planning;
     // see graft.plans.GraftBroadcastStats for the full why)
     ext.injectOptimizerRule(_ => graft.plans.GraftBroadcastStats)
+    // a small presentation sort runs in one partition, without the range
+    // exchange's sampling job (see graft.plans.SmallSortOnePartition)
+    ext.injectOptimizerRule(_ => graft.plans.SmallSortOnePartition)
   }
 }
 

@@ -14,6 +14,14 @@ object GraftSqlBridge {
   def translateFilter(e: Expression): Option[org.apache.spark.sql.sources.Filter] =
     execution.datasources.DataSourceStrategy.translateFilter(e, supportNestedPredicatePushdown = false)
 
+  /** Spark's own conversion of one parquet footer to a schema, with the
+    * converter settings schema inference uses (`readSchema` is
+    * `private[parquet]`, hence the packaging below). */
+  def parquetSchema(
+      spark: SparkSession,
+      footer: org.apache.parquet.hadoop.Footer): Option[types.StructType] =
+    execution.datasources.parquet.GraftParquetSchema.read(spark, footer)
+
   /** The registered catalog plugin under `name`, if any — CatalogManager
     * accessors are `private[sql]`, hence bridged. */
   def catalogPlugin(
@@ -75,5 +83,12 @@ object GraftSqlBridge {
       case other => throw new IllegalArgumentException(
         s"catalog ${other.name} is not a TableCatalog")
     }
+  }
+}
+
+package execution.datasources.parquet {
+  private[sql] object GraftParquetSchema {
+    def read(spark: SparkSession, footer: org.apache.parquet.hadoop.Footer): Option[types.StructType] =
+      ParquetFileFormat.readSchema(Seq(footer), spark)
   }
 }

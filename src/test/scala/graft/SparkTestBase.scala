@@ -10,6 +10,15 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
   def sfDir: String = SparkTestBase.sfDir
+
+  /** A new session over the judged session's context with `confs` set
+    * on top of the judged conf, so a variant never mutates the shared
+    * session. */
+  def variant(confs: (String, String)*): SparkSession = {
+    val s = spark.newSession()
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    s
+  }
 }
 
 object SparkTestBase {

@@ -1,12 +1,10 @@
 package graft.table
 
 import java.sql.Timestamp
-import java.util.concurrent.atomic.AtomicInteger
 
 import graft.SparkTestBase
 import graft.table.GraftIO.RichHPath
 import graft.spark.GraftCatalogPlugin
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources._
@@ -73,34 +71,6 @@ class MetadataDeleteSpec extends SparkTestBase {
     sorted(t.readChanges(spark, k - 1, k).drop("_commit_snapshot_id"))
   }
 
-  /** Spark jobs `body` submits from this thread. Job-start events reach
-    * listeners asynchronously but in order, so a marker job's start
-    * event fences every job the body ran. */
-  private def jobsRun(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"metadelete-probe-$n"
-    val marker = s"$group-marker"
-    val jobs = new AtomicInteger
-    val fenced = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`)  => jobs.incrementAndGet()
-          case Some(`marker`) => fenced.countDown()
-          case _              => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "metadata-only delete")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "listener fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(fenced.await(30, java.util.concurrent.TimeUnit.SECONDS), "fence job never seen")
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
-
   /** Run `where` as SQL on `a` and as the reference Column delete on
     * `b`; both tables must end identical. */
   private def deleteBoth(c: String, a: GraftTable, b: GraftTable, where: String): Unit = {
@@ -124,7 +94,8 @@ class MetadataDeleteSpec extends SparkTestBase {
     assert(dropped.map(dayOf).toSet === Set("2024-01-01", "2024-01-02"))
     assert(dropped.size === 4, dropped.map(_.path))
     assert(probe.isEmpty, probe.map(_.path))
-    val jobs = jobsRun(spark.sql(s"DELETE FROM $c.db.a WHERE ts < TIMESTAMP '2024-01-03 00:00:00'"))
+    val jobs = graft.SparkJobs.count(spark)(
+      spark.sql(s"DELETE FROM $c.db.a WHERE ts < TIMESTAMP '2024-01-03 00:00:00'"))
     assert(jobs === 0)
     b.delete(spark, col("ts") < lit("2024-01-03 00:00:00").cast(TimestampType))
     assert(sorted(a.read(spark)) === sorted(b.read(spark)))
